@@ -6,11 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{BpeMergeAll, CharKGrams, CosineSimilarity, DotProduct, JaroWinkler, MinHashBands, MinHashSigs, NearestCell, PqCodes, PqDotTable, SimHashTokens, VectorNorm, WinnowFps, WordShingles}
 
-/** Session extensions: registers the native vector expressions as SQL
-  * functions. Enable with
+/** Session extensions: SQL function names for the native expressions
+  * (`vec_dot`, `minhash_bands`, `bloom_agg`, ...), built from the same case
+  * classes the library operators construct directly. Enable with
   * `.config("spark.sql.extensions", "graft.GraftExtensions")` — the
-  * standard plugin mechanism, so user sessions (and spark-sql/pyspark
-  * shells) get `vec_dot` / `cosine_sim` without code changes.
+  * standard plugin mechanism, so spark-sql/pyspark shells can call them.
+  * No library operator needs it: every operator builds its kernels through
+  * [[org.apache.spark.sql.GraftColumn]] and runs in any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -146,8 +148,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       arity("jaro_winkler", 2)(c => JaroWinkler(c(0), c(1)))))
     // Spark ships bloom build/probe expressions for its own runtime join
     // filters but does not register them as SQL functions; exposing them
-    // makes the pre-shuffle join pruning in Relational.bloomPrunedJoin (and
-    // ad-hoc SQL) expressible without UDFs. bloom_agg(xxhash64(k), items,
+    // makes the pre-shuffle join pruning of Relational.bloomPrunedJoin
+    // expressible in ad-hoc SQL without UDFs. bloom_agg(xxhash64(k), items,
     // bits) -> binary; bloom_might_contain(filter, xxhash64(k)) -> boolean
     // (no false negatives, so a post-probe equi-join stays exact).
     ext.injectFunction((

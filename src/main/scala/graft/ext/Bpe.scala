@@ -1,8 +1,10 @@
 package graft.ext
 import graft.Ckpt.CkptOps
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.functions.BpeMergeAll
 
 /** Distributed BPE tokenizer TRAINING (Sennrich et al. 2016, "Neural
   * Machine Translation of Rare Words with Subword Units" — the public
@@ -15,9 +17,9 @@ import org.apache.spark.sql.functions._
   * corpus is read once and the per-round cost is |distinct words|, not
   * corpus size. Each round is: one map-side pair extraction + one
   * pair-count shuffle + a LIMIT-1 argmax (the only collect — one row,
-  * k-bounded) + a map-only greedy re-segmentation via a codegen
-  * `aggregate` fold (no UDF, no shuffle). `localCheckpoint` per round
-  * truncates the 20-plan lineage, the kmeans/pagerank pattern.
+  * k-bounded) + a map-only greedy re-segmentation via the native
+  * `bpe_merge_all` kernel (no UDF, no shuffle). `localCheckpoint` every
+  * few rounds truncates the lineage, the kmeans/pagerank pattern.
   *
   * Greedy-leftmost merge semantics: the fold appends each symbol unless
   * the accumulator's last element is `lhs` and the current is `rhs`, in
@@ -73,7 +75,7 @@ object Bpe {
         // native merges over the last checkpoint (map work on the vocab),
         // and a checkpoint every ckptEvery rules keeps plan depth and
         // re-execution bounded.
-        cur = cur.withColumn("syms", mergeRuleCol(col("syms"), a, b))
+        cur = applyMergesCol(cur, Seq((a, b)))
         pending += 1
         if (pending == ckptEvery) {
           val next = cur.ckpt()
@@ -93,49 +95,25 @@ object Bpe {
   /** Checkpoint cadence of the training loop's lazy rule chain. */
   private val ckptEvery = 4
 
-  /** Character-initial symbol split — the native one-pass kernel
-    * (`char_kgrams` at k = 1) when the session ships it; the
-    * `transform(sequence(…), substr)` HOF otherwise (identical output —
-    * vocab words are non-empty, so the descending-sequence edge never
-    * fires). */
-  private def charSymsCol(word: Column): Column =
-    if (TextOps.hasNativeFn("char_kgrams"))
-      call_function("char_kgrams", word, lit(1))
-    else transform(sequence(lit(1), length(word)), i => word.substr(i, lit(1)))
+  /** Character-initial symbol split: char k-grams at k = 1. */
+  private def charSymsCol(word: Column): Column = TextOps.kgramsCol(word, 1)
 
-  /** One merge rule over a symbol array: the native one-pass kernel
-    * ([[graft.functions.BpeMergeAll]], greedy-leftmost == the fold,
-    * BpeKernelSpec) when available, else the interpreted fold. */
-  private def mergeRuleCol(syms: Column, a: String, b: String): Column =
-    if (TextOps.hasNativeFn("bpe_merge_all"))
-      call_function("bpe_merge_all", syms, typedlit(Seq(a)), typedlit(Seq(b)))
-    else mergePair(syms, a, b)
-
-  /** ALL merge rules in rank order: ONE native expression when available
-    * (plan depth 1, no mid-chain lineage checkpoints), else the per-rule
-    * interpreted folds checkpointed every 8 (the pre-round-14 shape). */
+  /** Merge rules in rank order over the `syms` column as ONE native
+    * expression ([[graft.functions.BpeMergeAll]], greedy-leftmost per
+    * rule — pinned against the sequential fold by SketchKernelSpec). */
   private def applyMergesCol(vocab: DataFrame,
                              merges: Seq[(String, String)]): DataFrame =
     if (merges.isEmpty) vocab
-    else if (TextOps.hasNativeFn(vocab, "bpe_merge_all"))
-      vocab.withColumn("syms", call_function("bpe_merge_all", col("syms"),
-        typedlit(merges.map(_._1)), typedlit(merges.map(_._2))))
-    else {
-      var cur = vocab
-      merges.zipWithIndex.foreach { case ((a, b), i) =>
-        cur = cur.withColumn("syms", mergePair(col("syms"), a, b))
-        if ((i + 1) % 8 == 0) cur = cur.ckpt()
-      }
-      cur
-    }
+    else vocab.withColumn("syms", GraftColumn(BpeMergeAll(
+      GraftColumn.expr(col("syms")), merges.map(_._1), merges.map(_._2))))
 
   /** Apply a learned merge table: tokenize `textCol` with `merges` in
     * rank order. The scale shape mirrors [[train]]: merges are applied to
-    * the DISTINCT-WORD table (every rule a map-only fold; lineage
-    * truncated every 8 rules to keep codegen shallow), then documents
-    * join their words to the encoded vocab and reassemble in order — the
-    * corpus pays one explode + one equality join + one per-doc groupBy,
-    * never a per-rule pass. Returns (idCol, toks) with tokens
+    * the DISTINCT-WORD table (all rules in one map-only native
+    * expression), then documents join their words to the encoded vocab
+    * and reassemble in order — the corpus pays one explode + one
+    * equality join + one per-doc groupBy, never a per-rule pass.
+    * Returns (idCol, toks) with tokens
     * space-joined in document order (empty words dropped; documents with
     * no non-empty words are absent, matching the vocab inner join). */
   def encode(df: DataFrame, idCol: String, textCol: String,
@@ -168,15 +146,6 @@ object Bpe {
       .withColumn("syms", charSymsCol(col("word"))), merges)
       .select(col("freq"), explode(col("syms")).as("token"))
       .groupBy("token").agg(sum(col("freq")).as("n"))
-
-  /** Leftmost-greedy single-pair merge over a symbol array — one codegen
-    * fold, no UDF. */
-  private[graft] def mergePair(syms: Column, a: String, b: String): Column =
-    aggregate(syms, array().cast("array<string>"),
-      (acc, x) => when(
-        size(acc) > 0 && element_at(acc, -1) === lit(a) && x === lit(b),
-        concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
-        .otherwise(concat(acc, array(x))))
 
   /** DuckDB replay of [[train]]: `merges` unrolled rounds, each four
     * MATERIALIZED CTEs (pair argmax with the same tiebreak; greedy-

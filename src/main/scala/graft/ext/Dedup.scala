@@ -2,8 +2,10 @@ package graft.ext
 import graft.Ckpt
 import graft.Ckpt.CkptOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{MinHashBands, MinHashSigs, SimHashTokens}
 
 import TextOps.{jaccard, shingles}
 
@@ -224,17 +226,9 @@ object Dedup {
     out
   }
 
-  /** MinHash signature table: (id, h0..h{numHashes-1}) — explode the shingle
-    * set, hash each shingle once per seed, take per-seed minima with a
-    * map-side-partial groupBy.
-    *
-    * Deliberately NOT a nested higher-order expression
-    * (`transform(seeds, i => array_min(transform(shingles, ...)))`): the
-    * interpreted HOF path re-evaluates the whole shingle expression per
-    * seed, making one row cost O(tokens² · seeds) — observed as a
-    * 20-minute single task on a 500-doc partition. The explode→groupBy
-    * shape hashes each shingle exactly `numHashes` times, parallelizes
-    * across partitions, and scales to 100 TB (one shuffle on id). */
+  /** MinHash signature table: (id, h0..h{numHashes-1}) — slot i is the
+    * minimum over the doc's shingles s of xxhash64(s, i). Docs with no
+    * shingles are absent. */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 64, shingleK: Int = 3): DataFrame =
     minhashSignaturesFromSets(
@@ -249,25 +243,18 @@ object Dedup {
   def minhashSignaturesFromSets(sets: DataFrame,
                                 numHashes: Int = 64): DataFrame =
     // native per-row kernel (round 14, guide §2.4): the signature is a
-    // pure per-document fold, so the explode→groupBy formulation paid a
+    // pure per-document fold, so an explode→groupBy formulation pays a
     // full shuffle of one row PER SHINGLE OCCURRENCE (corpus-sized at
-    // 100 TB) and re-hashed each shingle's bytes once per slot
+    // 100 TB) and re-hashes each shingle's bytes once per slot
     // (`xxhash64(s, i)` × 64). The kernel computes bit-identical slot
     // minima map-side — zero shuffles, one string hash per shingle.
-    // Empty shingle sets yield null → filtered, matching the exploded
-    // form's absent-id semantics. HOF fallback for plain sessions.
-    if (TextOps.hasNativeFn(sets, "minhash_sigs")) {
-      val sig = sets
-        .select(col("id"),
-          call_function("minhash_sigs", col("sh"), lit(numHashes)).as("__sig"))
-        .where(col("__sig").isNotNull)
-      sig.select(col("id") +: (0 until numHashes)
+    // Empty shingle sets yield null → filtered (absent id).
+    sets.select(col("id"),
+        GraftColumn(MinHashSigs(GraftColumn.expr(col("sh")), numHashes))
+          .as("__sig"))
+      .where(col("__sig").isNotNull)
+      .select(col("id") +: (0 until numHashes)
         .map(i => element_at(col("__sig"), i + 1).as(s"h$i")): _*)
-    } else {
-      val exploded = sets.select(col("id"), explode(col("sh")).as("s"))
-      val mins = (0 until numHashes).map(i => min(xxhash64(col("s"), lit(i))).as(s"h$i"))
-      exploded.groupBy("id").agg(mins.head, mins.tail: _*)
-    }
 
   /** Banded signature rows: (id, band, band_hash) — one row per band, where
     * band_hash fingerprints `rowsPerBand` consecutive signature slots.
@@ -286,24 +273,15 @@ object Dedup {
                            bands: Int = 16): DataFrame = {
     require(numHashes % bands == 0, s"numHashes=$numHashes not divisible by bands=$bands")
     // native per-row kernel (round 14): signature + banding in one
-    // map-side fold — the first shuffle of every near-dup path
-    // (explode→groupBy over shingle occurrences) is GONE; band hash
-    // values are bit-identical (same XXH64 seed chains), so persisted
-    // band indexes from earlier stagings still join correctly.
-    // posexplode of the null (empty-set) result emits no rows, matching
-    // the exploded form. HOF fallback for plain sessions.
-    if (TextOps.hasNativeFn(sets, "minhash_bands"))
-      sets.select(col("id"),
-        posexplode(call_function("minhash_bands", col("sh"),
-          lit(numHashes), lit(bands))).as(Seq("band", "band_hash")))
-    else {
-      val r = numHashes / bands
-      val sig = minhashSignaturesFromSets(sets, numHashes)
-      val bandHashes = array((0 until bands).map { j =>
-        xxhash64((j * r until (j + 1) * r).map(i => col(s"h$i")): _*)
-      }: _*)
-      sig.select(col("id"), posexplode(bandHashes).as(Seq("band", "band_hash")))
-    }
+    // map-side fold — no explode→groupBy over shingle occurrences before
+    // the first band join; band hash values are bit-identical to the
+    // xxhash64 chain (same seeds), so persisted band indexes from earlier
+    // stagings still join correctly. posexplode of the null (empty-set)
+    // result emits no rows.
+    sets.select(col("id"),
+      posexplode(GraftColumn(
+        MinHashBands(GraftColumn.expr(col("sh")), numHashes, bands)))
+        .as(Seq("band", "band_hash")))
   }
 
   /** [[dropNearDupGroups]] with a QUALITY keep policy: keep the
@@ -480,7 +458,7 @@ object Dedup {
     // [[nearDupCandidates]]: the far-smaller verified pair set materializes
     // eagerly, then the set cache is released)
     val sets = df.select(col(blockCol).as("block"), col(idCol).as("id"),
-      TextOps.charGramsOf(df)(col(textCol), k).as("g")).persist()
+      TextOps.charGrams(col(textCol), k).as("g")).persist()
     val x = sets.select(col("block"), col("id").as("a_id"), col("g").as("a_g"))
     val y = sets.select(col("block"), col("id").as("b_id"), col("g").as("b_g"))
     val pairs = x.join(y, Seq("block"))
@@ -645,7 +623,7 @@ object Dedup {
                                  idCol: String, textCol: String, k: Int = 5,
                                  threshold: Double = 0.6): DataFrame = {
     val sets = df.select(col(idCol).as("id"),
-      TextOps.charGramsOf(df)(col(textCol), k).as("g"))
+      TextOps.charGrams(col(textCol), k).as("g"))
     cands.select("a_id", "b_id")
       .join(sets.select(col("id").as("a_id"), col("g").as("a_g")), Seq("a_id"))
       .join(sets.select(col("id").as("b_id"), col("g").as("b_g")), Seq("b_id"))
@@ -664,59 +642,29 @@ object Dedup {
     df.join(pairs.select(col("b_id").as(idCol)).distinct(),
       Seq(idCol), "left_anti")
 
-  /** SimHash table (id, sim) via explode→groupBy: hash each token once,
-    * take per-bit majorities with map-side-partial sums, pack bits. Same
-    * rationale as [[minhashSignatures]] — the nested-HOF form re-splits and
-    * re-hashes per bit in the interpreted path (observed 8 s on 500 docs;
-    * this shape is ~1 s and scales out). */
+  /** SimHash table (id, sim): per-bit majority over the token hashes,
+    * bits packed into one long. Token hash: xxhash64 (seed 42) by
+    * default; `md5Hash = true` uses [[TextOps.md5Hash60]], the
+    * engine-neutral form (use bits ≤ 60 with it — only the low 60 hash
+    * bits carry entropy). */
   def simhashes(df: DataFrame, idCol: String, textCol: String,
-                bits: Int = 32,
-                hash: Column => Column = xxhash64(_)): DataFrame =
+                bits: Int = 32, md5Hash: Boolean = false): DataFrame =
     simhashesFromTokens(
       df.select(col(idCol).as("id"), split(col(textCol), " ").as("w")),
-      bits, hash)
+      bits, md5Hash)
 
   /** [[simhashes]] over a pre-split `(id, w)` token-array frame — the
     * shared-tokenization entry point (see
     * [[graft.ext.TextOps.ngramsFromTokens]]). */
   def simhashesFromTokens(tok: DataFrame, bits: Int = 32,
-                          hash: Column => Column = xxhash64(_)): DataFrame =
+                          md5Hash: Boolean = false): DataFrame =
     // native per-row kernel (round 14, guide §2.4): the bit-majority is a
-    // pure per-document fold — the explode→groupBy formulation shuffled
+    // pure per-document fold — an explode→groupBy formulation shuffles
     // one row per TOKEN OCCURRENCE into a 60-column bit-sum aggregate.
-    // The kernel packs bit-identical signatures map-side for the two hash
-    // recipes the engine ships (xxhash64 / md5-60); any other caller-
-    // supplied hash keeps the exploded form. Empty token arrays yield
-    // null → filtered, matching the exploded form's absent-id semantics.
-    simhashHashKind(tok, hash) match {
-      case Some(md5Kind) if TextOps.hasNativeFn(tok, "simhash_tokens") =>
-        tok.select(col("id"),
-            call_function("simhash_tokens", col("w"), lit(bits), lit(md5Kind))
-              .as("sim"))
-          .where(col("sim").isNotNull)
-      case _ =>
-        val hashed = tok
-          .select(col("id"), explode(col("w")).as("w"))
-          .select(col("id"), hash(col("w")).as("h"))
-        val bitSums = (0 until bits).map(b =>
-          sum(shiftright(col("h"), b).bitwiseAND(1)).as(s"b$b"))
-        val agg = hashed.groupBy("id")
-          .agg(count(lit(1)).as("n"), bitSums: _*)
-        val packed = (0 until bits).map(b =>
-          when(col(s"b$b") * 2 > col("n"), lit(1L << b)).otherwise(lit(0L)))
-          .reduce(_ + _)
-        agg.select(col("id"), packed.as("sim"))
-    }
-
-  /** Behavior probe of a caller-supplied token-hash recipe: evaluate it
-    * on three literal strings (constant-folded — a LocalRelation head(),
-    * no cluster work) and compare against the two kernel recipes.
-    * Some(false) = xxhash64 (seed 42), Some(true) = the md5-60 shape
-    * ([[TextOps.md5Hash60]]), None = anything else (exploded fallback —
-    * never guess a kernel for an unknown hash). */
-  private def simhashHashKind(tok: DataFrame,
-                              hash: Column => Column): Option[Boolean] =
-    TextOps.knownHashKind(tok.sparkSession, hash)
+    // Empty token arrays yield null → filtered (absent id).
+    tok.select(col("id"),
+        GraftColumn(SimHashTokens(GraftColumn.expr(col("w")), bits, md5Hash)).as("sim"))
+      .where(col("sim").isNotNull)
 
   /** Connected components over an undirected pair list — the transitive-
     * closure canonicalization [[dropNearDups]] deliberately leaves open:
@@ -1140,15 +1088,13 @@ object Dedup {
     pairs
   }
 
-  /** SimHash near-dup pairs: [[simhashes]] piped through [[signaturePairs]].
-    * `hash` (word-level) defaults to xxhash64; [[TextOps.md5Hash60]] gives
-    * an engine-neutral variant (use bits ≤ 60 with it — only the low 60
-    * hash bits carry entropy). */
+  /** SimHash near-dup pairs: [[simhashes]] piped through [[signaturePairs]]
+    * (`md5Hash` picks the token hash as in [[simhashes]]). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = 3, bits: Int = 32, bands: Int = 4,
                    maxBucket: Int = 10000,
-                   hash: Column => Column = xxhash64(_)): DataFrame =
-    signaturePairs(simhashes(df, idCol, textCol, bits, hash), maxDist, bits,
+                   md5Hash: Boolean = false): DataFrame =
+    signaturePairs(simhashes(df, idCol, textCol, bits, md5Hash), maxDist, bits,
       bands, maxBucket)
 
   /** [[simhashPairs]] over a pre-split `(id, w)` token-array frame that
@@ -1156,8 +1102,8 @@ object Dedup {
   def simhashPairsFromTokens(tok: DataFrame, maxDist: Int = 3,
                              bits: Int = 32, bands: Int = 4,
                              maxBucket: Int = 10000,
-                             hash: Column => Column = xxhash64(_)): DataFrame =
-    signaturePairs(simhashesFromTokens(tok, bits, hash), maxDist, bits,
+                             md5Hash: Boolean = false): DataFrame =
+    signaturePairs(simhashesFromTokens(tok, bits, md5Hash), maxDist, bits,
       bands, maxBucket)
 
   /** Cross-source priority dedup — the multi-dump mixing rule: when the

@@ -1,9 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, GraftColumn}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+
+import graft.functions.NearestCell
 
 /** Mutable centroid accumulator: element-wise sum + count. */
 final case class CentroidBuf(var sum: Array[Double], var n: Long)
@@ -83,35 +85,31 @@ object Ivf {
     * unit-normalized centroid literals. The row's own norm is a constant
     * factor across all centroids, so argmax dot == argmax cosine — no
     * per-centroid recomputation of sqrt(dot(vec,vec)), and the dot itself
-    * is the native codegen `vec_dot` when the extension is registered
-    * (the interpreted HOF cosine here was the round-2 perf_weak finding). */
-  private def centroidDots(df: DataFrame, vec: Column,
+    * is the native codegen `vec_dot` (the interpreted HOF cosine here was
+    * the round-2 perf_weak finding). */
+  private def centroidDots(vec: Column,
                            cents: Seq[(Int, Seq[Double])]): Column = {
-    val d = Similarity.pdot(df) _
     array(cents.map { case (cell, c) =>
       struct(
-        d(vec, typedlit(unitize(c))).as("score"),
+        Similarity.pdot(vec, typedlit(unitize(c))).as("score"),
         lit(cell).as("cell"))
     }: _*)
   }
 
   /** Assignment column: index of the centroid with max cosine to `vec`.
-    * Centroids travel as literals (bounded: k × dim doubles). Prefers the
-    * native `nearest_cell` kernel ([[graft.functions.NearestCell]]): the
-    * composed form is one vec_dot struct PER centroid, and k-means pays
-    * its analysis+codegen cost per Lloyd iteration (the same
-    * plan-time-dominates pattern as the PQ tree); the kernel is one loop
-    * over the centroid literals with identical arithmetic and the same
-    * larger-cell-on-tie rule as array_max's struct comparison. */
-  private def nearestCell(df: DataFrame, vec: Column,
+    * Centroids travel as literals (bounded: k × dim doubles) into the
+    * native `nearest_cell` kernel ([[graft.functions.NearestCell]]): a
+    * composed `array_max` over [[centroidDots]] is one vec_dot struct PER
+    * centroid, and k-means pays its analysis+codegen cost per Lloyd
+    * iteration (the same plan-time-dominates pattern as the PQ tree); the
+    * kernel is one loop over the centroid literals with identical
+    * arithmetic and the same larger-cell-on-tie rule as array_max's
+    * struct comparison. */
+  private def nearestCell(vec: Column,
                           cents: Seq[(Int, Seq[Double])]): Column =
-    if (df.sparkSession.catalog.functionExists("nearest_cell")) {
-      val dim = cents.head._2.length
-      call_function("nearest_cell", vec,
-        typedlit(cents.flatMap(c => unitize(c._2)).toArray),
-        typedlit(cents.map(_._1).toArray), lit(dim))
-    } else
-      array_max(centroidDots(df, vec, cents)).getField("cell")
+    GraftColumn(NearestCell(GraftColumn.expr(vec),
+      cents.flatMap(c => unitize(c._2)).toArray, cents.map(_._1).toArray,
+      cents.head._2.length))
 
   /** Distributed Lloyd k-means over an embedding column (cosine
     * assignment): deterministic seeded init (k rows by hash order), then
@@ -144,12 +142,12 @@ object Ivf {
 
     var it = 0
     while (it < iters) {
-      val assigned = work.withColumn("cell", nearestCell(work, col(vecCol), cents))
+      val assigned = work.withColumn("cell", nearestCell(col(vecCol), cents))
       cents = centroids(assigned, "cell", vecCol)
         .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq).toSeq
       it += 1
     }
-    val out = df.withColumn("cell", nearestCell(df, col(vecCol), cents))
+    val out = df.withColumn("cell", nearestCell(col(vecCol), cents))
     work.unpersist()
     out
   }
@@ -192,22 +190,20 @@ object Ivf {
 
     // rank cells per query by centroid dot (unit centroids ⇒ cosine order),
     // keep nprobe; norms computed ONCE per row, native vec_dot throughout
-    val d = Similarity.pdot(corpus) _
-    val nrm = Similarity.pnorm(corpus) _
     val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        nrm(col(vecCol)).as("q_norm"),
+        Similarity.pnorm(col(vecCol)).as("q_norm"),
         explode(slice(reverse(array_sort(
-          centroidDots(queries, col(vecCol), cents))), 1, nprobe)).as("probe"))
+          centroidDots(col(vecCol), cents))), 1, nprobe)).as("probe"))
       .select(col("q_id"), col("q_vec"), col("q_norm"),
         col("probe.cell").as("cell"))
 
     val c = corpus.select(col(cellCol).cast("int").as("cell"),
       col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      nrm(col(vecCol)).as("n_norm"))
+      Similarity.pnorm(col(vecCol)).as("n_norm"))
     // scoring/ranking (incl. the zero-norm NaN guard) is the SAME contract
     // as the brute-force and LSH paths — one shared implementation
     Similarity.scoreRankTopK(
       c.join(probed, Seq("cell")).where(col("n_id") =!= col("q_id")),
-      d, k, roundTo)
+      Similarity.pdot, k, roundTo)
   }
 }

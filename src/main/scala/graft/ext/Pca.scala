@@ -162,7 +162,7 @@ object Pca {
 
     def proj(u: Array[Double], muDot: Double): Column =
       org.apache.spark.sql.functions.round(
-        Similarity.pdot(embeddings)(col(vecCol), typedLit(u)) - lit(muDot),
+        Similarity.pdot(col(vecCol), typedLit(u)) - lit(muDot),
         outRound)
     embeddings.select(col(idCol),
       proj(u1, muDot1).as("pc1"), proj(u2, muDot2).as("pc2"))

@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{PqCodes, PqDotTable}
 
 /** Product quantization (PQ) for embedding search — the classic ANN memory
   * lever (Jégou et al., "Product Quantization for Nearest Neighbor Search",
@@ -40,12 +42,11 @@ object Pq {
     * sequential double fold. Ties break toward the smaller code. `cc` is
     * the driver-precomputed c·c (same left-to-right fold as the runtime
     * dot, so the replayed oracle agrees up to assignment margins). */
-  private def assignCol(df: DataFrame, sub: Column,
+  private def assignCol(sub: Column,
                         cents: Seq[Seq[Double]]): Column = {
-    val d = Similarity.pdot(df) _
     array_min(array(cents.zipWithIndex.map { case (c, code) =>
       val cc = c.foldLeft(0.0)((acc, x) => acc + x * x)
-      struct((lit(cc) - lit(2.0) * d(sub, typedlit(c))).as("score"),
+      struct((lit(cc) - lit(2.0) * Similarity.pdot(sub, typedlit(c))).as("score"),
         lit(code).as("code"))
     }: _*)).getField("code")
   }
@@ -83,7 +84,7 @@ object Pq {
     // keeps the packing collision-free.
     val assigned = work
       .select(col(vecCol).as("__v"),
-        codesCol(work, col(vecCol), seedCbs).as("__codes"))
+        codesCol(col(vecCol), seedCbs).as("__codes"))
       .select(posexplode(col("__codes")).as(Seq("__s", "cell")), col("__v"))
       .select(
         (col("__s") * 65536 + col("cell")).cast("int").as("k"),
@@ -152,26 +153,27 @@ object Pq {
   /** Encode every vector as its `m` positional codes (the compressed
     * representation a 100 TB index stores instead of the vectors).
     *
-    * Prefers the native `pq_codes` kernel ([[graft.functions.PqCodes]],
-    * registered by [[graft.GraftExtensions]]): the composed form below is
-    * a 64-subexpression tree whose ANALYSIS + whole-stage-codegen cost
-    * (~seconds, data-independent) dominated topk_sim_pq; the kernel is one
-    * loop over the codebook literals with bit-identical arithmetic, so the
-    * replayed oracle cannot tell them apart. */
+    * Uniform codebooks go through the native `pq_codes` kernel
+    * ([[graft.functions.PqCodes]]): the composed form below (kept for
+    * ragged codebooks, see [[uniform]]) is a 64-subexpression tree whose
+    * ANALYSIS + whole-stage-codegen cost (~seconds, data-independent)
+    * dominated topk_sim_pq; the kernel is one loop over the codebook
+    * literals with bit-identical arithmetic, so the replayed oracle cannot
+    * tell them apart. */
   def encode(df: DataFrame, idCol: String, vecCol: String,
              cbs: Codebooks): DataFrame =
-    df.select(col(idCol), codesCol(df, col(vecCol), cbs).as("codes"))
+    df.select(col(idCol), codesCol(col(vecCol), cbs).as("codes"))
 
-  /** All-subspace code array (native kernel or composed fallback). */
-  private def codesCol(df: DataFrame, vec: Column, cbs: Codebooks): Column = {
+  /** All-subspace code array (native kernel, or composed when ragged). */
+  private def codesCol(vec: Column, cbs: Codebooks): Column = {
     val dsub = cbs.head.head.length
-    if (uniform(cbs) && df.sparkSession.catalog.functionExists("pq_codes")) {
+    if (uniform(cbs)) {
       val (cbFlat, ccFlat) = flat(cbs)
-      call_function("pq_codes", vec, typedlit(cbFlat),
-        typedlit(ccFlat), lit(cbs.head.length), lit(dsub))
+      GraftColumn(PqCodes(GraftColumn.expr(vec), cbFlat, ccFlat,
+        cbs.head.length, dsub))
     } else
       array(cbs.zipWithIndex.map { case (cb, s) =>
-        assignCol(df, subCol(vec, s, dsub), cb)
+        assignCol(subCol(vec, s, dsub), cb)
       }: _*)
   }
 
@@ -195,20 +197,18 @@ object Pq {
                        idCol: String, vecCol: String, cbs: Codebooks,
                        k: Int, roundTo: Int = 4): DataFrame = {
     val dsub = cbs.head.head.length
-    val d = Similarity.pdot(queries) _
     // flattened dt: subspace s's codewords start at offsets(s)
     val offsets = cbs.scanLeft(0)(_ + _.length).init
-    // native kernel preferred for the same plan-cost reason as [[encode]]
+    // native kernel for uniform codebooks, same plan-cost reason as [[encode]]
     val dt =
-      if (uniform(cbs) &&
-          queries.sparkSession.catalog.functionExists("pq_dot_table"))
-        call_function("pq_dot_table", col(vecCol), typedlit(flat(cbs)._1),
-          lit(cbs.head.length), lit(dsub))
+      if (uniform(cbs))
+        GraftColumn(PqDotTable(GraftColumn.expr(col(vecCol)), flat(cbs)._1,
+          cbs.head.length, dsub))
       else
         array((for {
           (cb, s) <- cbs.zipWithIndex
           c <- cb
-        } yield d(subCol(col(vecCol), s, dsub), typedlit(c))): _*)
+        } yield Similarity.pdot(subCol(col(vecCol), s, dsub), typedlit(c))): _*)
     val q = broadcast(queries.select(col(idCol).as("q_id"), dt.as("dt")))
     val n = codes.select(col(idCol).as("n_id"), col("codes"))
     val scored = n.crossJoin(q).where(col("n_id") =!= col("q_id"))
@@ -244,12 +244,11 @@ object Pq {
     require(shortlist >= k, s"shortlist=$shortlist must be >= k=$k")
     val cands = adcTopK(corpus, queries, idCol, vecCol, cbs, shortlist, roundTo)
       .select("q_id", "n_id")
-    val nrm = Similarity.pnorm(corpus) _
     val q = broadcast(queries.select(col(idCol).as("q_id"),
-      col(vecCol).as("q_vec"), nrm(col(vecCol)).as("q_norm")))
+      col(vecCol).as("q_vec"), Similarity.pnorm(col(vecCol)).as("q_norm")))
     val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      nrm(col(vecCol)).as("n_norm"))
+      Similarity.pnorm(col(vecCol)).as("n_norm"))
     Similarity.scoreRankTopK(cands.join(c, Seq("n_id")).join(q, Seq("q_id")),
-      Similarity.pdot(corpus) _, k, roundTo)
+      Similarity.pdot, k, roundTo)
   }
 }

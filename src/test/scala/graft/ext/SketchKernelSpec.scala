@@ -35,7 +35,7 @@ class SketchKernelSpec extends SparkSpec {
     val native = docs.select(col("id"),
       call_function("word_shingles", w, lit(3)).as("sh"))
     val hof = docs.select(col("id"),
-      TextOps.shinglesFromTokensHof(w, 3).as("sh"))
+      KernelOracles.shinglesFromTokensHof(w, 3).as("sh"))
     val n = native.orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     val h = hof.orderBy("id").collect().map(r => (r.getLong(0), r.getSeq[String](1)))
     assert(n.toSeq == h.toSeq)
@@ -43,7 +43,7 @@ class SketchKernelSpec extends SparkSpec {
 
   test("minhash_sigs / minhash_bands == explode->groupBy xxhash64 chain") {
     val sets = docs.select(col("id"),
-      TextOps.shinglesFromTokensHof(TextOps.words(col("text")), 3).as("sh"))
+      KernelOracles.shinglesFromTokensHof(TextOps.words(col("text")), 3).as("sh"))
     val numHashes = 16
     val bands = 4
     val r = numHashes / bands
@@ -98,10 +98,10 @@ class SketchKernelSpec extends SparkSpec {
 
   test("simhashesFromTokens dispatches BOTH known hash kinds through the kernel path and matches") {
     val tok = docs.select(col("id"), TextOps.words(col("text")).as("w"))
-    for (hash <- Seq(
-        (c: org.apache.spark.sql.Column) => xxhash64(c),
-        (c: org.apache.spark.sql.Column) => TextOps.md5Hash60(c))) {
-      val out = Dedup.simhashesFromTokens(tok, bits = 60, hash = hash)
+    for ((md5Kind, hash) <- Seq(
+        (false, (c: org.apache.spark.sql.Column) => xxhash64(c)),
+        (true, (c: org.apache.spark.sql.Column) => TextOps.md5Hash60(c)))) {
+      val out = Dedup.simhashesFromTokens(tok, bits = 60, md5Hash = md5Kind)
       // kernel plan contract: no Exchange (the exploded fallback would
       // aggregate through one)
       val plan = out.queryExecution.executedPlan.toString
@@ -147,7 +147,7 @@ class SketchKernelSpec extends SparkSpec {
       val old = grams.withColumn("fp", min(col("h")).over(frame))
         .where(col("pos") - 1 <= greatest(col("n") - w, lit(0)))
         .select(col("id"), col("fp")).distinct()
-      val nw = TextOps.winnowFingerprints(docs, "id", "text", k, w, hash)
+      val nw = TextOps.winnowFingerprints(docs, "id", "text", k, w, md5Kind)
       assert(!nw.queryExecution.executedPlan.toString.contains("Window"),
         "kernel path must not plan a WindowExec")
       assert(nw.orderBy("id", "fp").collect().toSeq ==
@@ -167,7 +167,7 @@ class SketchKernelSpec extends SparkSpec {
     // fold oracle: apply rules sequentially with the interpreted fold
     var foldDf = df
     rules.foreach { case (a, b) =>
-      foldDf = foldDf.withColumn("syms", Bpe.mergePair(col("syms"), a, b))
+      foldDf = foldDf.withColumn("syms", KernelOracles.mergePair(col("syms"), a, b))
     }
     val native = df.withColumn("syms",
       call_function("bpe_merge_all", col("syms"),
@@ -178,7 +178,7 @@ class SketchKernelSpec extends SparkSpec {
     val one = df.withColumn("syms",
       call_function("bpe_merge_all", col("syms"),
         typedlit(Seq("a")), typedlit(Seq("a"))))
-    val oneFold = df.withColumn("syms", Bpe.mergePair(col("syms"), "a", "a"))
+    val oneFold = df.withColumn("syms", KernelOracles.mergePair(col("syms"), "a", "a"))
     assert(one.orderBy("word").collect().map(_.getSeq[String](1)).toSeq ==
       oneFold.orderBy("word").collect().map(_.getSeq[String](1)).toSeq)
   }

@@ -97,4 +97,12 @@ class StageSpec extends SparkSpec {
     assert(Files.readString(Paths.get(s"$p/x.txt")) == "REBUILT")
     assert(Files.exists(ver.resolve("_graft_ok")))
   }
+
+  test("corpusSig of a missing table throws and names the path") {
+    val dir = Files.createTempDirectory("graft_sigspec").toString
+    val e = intercept[java.io.IOException](
+      CoreQueries.corpusSig(dir, "missing.parquet"))
+    assert(e.getMessage.contains(Paths.get(dir, "missing.parquet").toString),
+      e.getMessage)
+  }
 }
