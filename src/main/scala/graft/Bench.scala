@@ -1,4 +1,11 @@
 package graft
+import java.nio.file.Files
+import java.util.concurrent.TimeUnit
+
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): times every registered query on
@@ -12,12 +19,12 @@ import org.apache.spark.sql.SparkSession
   *      accumulates GC pressure, shuffle-dir churn, and JIT deopt (round 5:
   *      dq_report benched 8.99 s vs 1.02 s isolated — 9x phantom).
   *   2. QUIET RE-TIME: the K slowest queries from pass 1 re-run one at a
-  *      time in a fresh session with cache clear + System.gc() + settle
-  *      before each, approximating an isolated JVM. A retimed query
-  *      PUBLISHES its quiet-pass value (method-stable — never
-  *      min-of-passes, which mixes methods across rounds and manufactures
-  *      phantom regressions), so BENCH_r* is a usable regression signal
-  *      for exactly the queries where pass 1 lies.
+  *      time, each in a fresh child JVM. A retimed query PUBLISHES its
+  *      child value (method-stable — never min-of-passes, which mixes
+  *      methods across rounds and manufactures phantom regressions), so
+  *      BENCH_r* is a usable regression signal for exactly the queries
+  *      where pass 1 lies. A query whose child yields no usable result
+  *      publishes its coverage value, tagged "coverage".
   * The JSON carries "retimed" (quiet-pass values), "coverage_pass" (the
   * raw pass-1 values for the same set — the delta is measured contention
   * inflation), and "method" (per-query pass tag) so cross-round diffs
@@ -39,24 +46,32 @@ object BenchFormat {
 }
 
 object Bench {
+  /** Runs `cmd` with `env` added to this JVM's environment, stderr
+    * inherited and stdout sent to a temp file that is read only once the
+    * child has exited, so a hung child is killed after `timeout` instead of
+    * hanging the caller. Right(stdout lines) on exit code 0, Left(reason)
+    * otherwise. */
+  private[graft] def runChild(cmd: Seq[String], env: Map[String, String],
+                              timeout: FiniteDuration): Either[String, Seq[String]] =
+    try {
+      val out = Files.createTempFile("graft_child", ".out")
+      try {
+        val pb = new ProcessBuilder(cmd: _*)
+          .redirectError(ProcessBuilder.Redirect.INHERIT)
+          .redirectOutput(out.toFile)
+        env.foreach { case (k, v) => pb.environment().put(k, v) }
+        val p = pb.start()
+        if (!p.waitFor(timeout.toMillis, TimeUnit.MILLISECONDS)) {
+          p.destroyForcibly().waitFor(10, TimeUnit.SECONDS)
+          Left(s"timed out after $timeout")
+        } else if (p.exitValue() != 0) Left(s"exit code ${p.exitValue()}")
+        else Right(Files.readAllLines(out).asScala.toSeq)
+      } finally Files.deleteIfExists(out)
+    } catch { case NonFatal(e) => Left(s"spawn failed: ${e.getMessage}") }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-    // optional conf overrides for experiments: SPARK_GRAFT_CONF="k=v;k2=v2"
-    sys.env.get("SPARK_GRAFT_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.harnessSession()
 
     // corpus signature up front: BENCH artifacts must say WHICH corpus they
     // measured (round 6 closed against data the driver regenerated later —
@@ -73,7 +88,7 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
 
-    def once(sess: SparkSession, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
+    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
              dir: String = sfDir): Double = {
       val t0 = System.nanoTime()
       // noop sink, NOT count(): count() lets Catalyst prune every output
@@ -86,7 +101,7 @@ object Bench {
       // accrete them (the sf10 OOM lesson); the release cost is inside
       // the timed window, as it would be in any real job.
       Ckpt.releasing {
-        fn(sess, dir).write.mode("overwrite").format("noop").save()
+        fn(spark, dir).write.mode("overwrite").format("noop").save()
       }
       (System.nanoTime() - t0) / 1e9
     }
@@ -100,11 +115,11 @@ object Bench {
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .map { case (name, fn) =>
         try {
-          val base = (1 to runs).map(_ => once(spark, fn))
+          val base = (1 to runs).map(_ => once(fn))
           // contention armor: when the two runs disagree >2x, something
           // external (GC, a concurrent process) likely polluted the window —
           // take a third run so the min is a believable operator time
-          val times = if (base.max > 2 * base.min) base :+ once(spark, fn) else base
+          val times = if (base.max > 2 * base.min) base :+ once(fn) else base
           name -> Right(times)
         } catch {
           case e: Throwable =>
@@ -121,8 +136,8 @@ object Bench {
     // report the coverage-pass minima on stdout in a trivial line format
     // and exit — no retime recursion, no artifact writes (a child must
     // never clobber the parent's bench/full_latest.json), no 1-row
-    // replay. The child's stdout goes to the parent's pipe, never to the
-    // driver, so the one-JSON-line stdout contract is untouched.
+    // replay. The child's stdout goes to a temp file the parent reads,
+    // never to the parent's stdout, so the one-JSON-line contract holds.
     if (sys.env.get("SPARK_GRAFT_CHILD").contains("1")) {
       ok.foreach { case (n, t) =>
         // scalastyle:off println
@@ -139,182 +154,62 @@ object Bench {
     // K defaults to 20 so every number PUBLISHED on stdout (the top-20 map
     // below) is a quiet-pass value — the driver-box artifact then matches a
     // builder's isolated run within contention noise instead of lying by up
-    // to 9x for fast queries (round-7 verdict item 4). Settle: clear cached
-    // relations, force a full GC (which also drives the ContextCleaner's
-    // shuffle/broadcast cleanup), and give the JVM a beat for
-    // compilation/cleanup threads to drain.
+    // to 9x for fast queries (round-7 verdict item 4).
     val retimeK = sys.env.get("SPARK_GRAFT_RETIME").map(_.toInt).getOrElse(20)
     val byName = SparkEntry.queries
-    // Retime hygiene (round 14 measurement-bug fix, documented in
-    // OPTIMIZATION_r14.md): the round-start baseline run showed quiet-pass
-    // retimes reading 2-9× ABOVE their own coverage-pass values
-    // (dedup_setsim_collapsed 4.2 s coverage → 36.5 s retime) — the
-    // opposite of what the quiet pass exists for. Cause: blocks pinned by
-    // the 2×316-query coverage sweep (operator persist()s whose release
-    // is GC/ContextCleaner-lagged, plus any leaked cache) fill the
-    // storage pool, so a heavy retimed query's own persists thrash
-    // to disk. clearCache() only drops catalog-registered relations;
-    // force-unpersist EVERY persistent RDD before each retime — between
-    // queries no cross-query cache is legitimate (staged artifacts live
-    // on disk, not in executor storage), so this only removes leaks. The
-    // count is printed so a leak regression is visible in the stderr log.
-    // Round-15 root cause of the residual retime>coverage inflation
-    // (r14 verdict item #5; measured with tools/RetimeLab): two sources,
-    // both OUTSIDE the query's own work, both fixed here —
-    //   (a) cleaner churn: the System.gc() right before the timed window
-    //       enqueues every dead shuffle/broadcast of the whole sweep so
-    //       far, and the ContextCleaner DELETES those files DURING the
-    //       timed runs (RetimeLab caught shuffle files of long-finished
-    //       queries disappearing mid-window). Fix: drain — keep
-    //       gc+settling until the spark local dirs' file count stops
-    //       moving, BEFORE the window opens.
-    //   (b) JIT re-warm: the first run after the settle carries 2-7 s of
-    //       background C2 compilation (profile pollution from 600+ prior
-    //       query runs deopts shared code paths), so min-of-2 publishes a
-    //       warmup-polluted value whenever run 2 catches any residue. Fix:
-    //       one UNTIMED warmup run before the timed ones — this matches
-    //       what the isolated fresh-JVM method this pass approximates
-    //       actually publishes (its best-of-2 is in practice run 2, after
-    //       run 1 absorbed the JIT).
-    // Timed windows are unchanged; both fixes run strictly before them.
-    // Old-method artifact kept: bench/r15_sf0.1_before_c32.json.
-    def localBlockFiles(): Long = {
-      // deletion-tolerant count (the cleaner may be unlinking concurrently):
-      // listFiles snapshots each directory and never throws on a race
-      def walk(f: java.io.File): Long = {
-        val kids = Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-        kids.foldLeft(0L)((n, k) => n + (if (k.isDirectory) walk(k) else 1L))
-      }
-      val dir = new java.io.File(
-        spark.sparkContext.getConf.get("spark.local.dir",
-          System.getProperty("java.io.tmpdir")))
-      Option(dir.listFiles).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("blockmgr-"))
-        .foldLeft(0L)((n, f) => n + walk(f))
+    val coverage = ok.toMap
+    // Each retime forks a fresh child JVM (same classpath, module options,
+    // heap and env, hence the same master, shuffle partitions and conf
+    // overrides) that times just that query with the coverage method. A
+    // fresh JVM because end-of-sweep C2 profile pollution from 600+ prior
+    // query runs left in-process retimes a durable 1.3-2.2x above an
+    // isolated run, and no in-process hygiene could undo it
+    // (OPTIMIZATION_r15.md).
+    val childCmd = {
+      val javaBin = new java.io.File(new java.io.File(
+        System.getProperty("java.home"), "bin"), "java").getAbsolutePath
+      val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
+        .defaultModuleOptions().split("\\s+").filter(_.nonEmpty).toSeq
+      val heap = java.lang.management.ManagementFactory.getRuntimeMXBean
+        .getInputArguments.toArray.collect { case s: String
+          if s.startsWith("-Xmx") || s.startsWith("-Xms") => s }.toSeq
+      Seq(javaBin) ++ moduleOpts ++ heap ++ Seq(
+        "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+        "-cp", System.getProperty("java.class.path"), "graft.Bench")
     }
-    // Round-15 measurement fix (r14 verdict item #5, final): even after the
-    // cleaner drain + untimed warmup above, retimes of several queries read
-    // a DURABLE 1.3-2.2x above a genuinely fresh JVM (same box, same corpus,
-    // same code: text_dup_spans_clean 6.19 published vs 2.80 fresh-JVM min,
-    // pipeline_release 4.59 vs 3.12, dedup_golden 4.18 vs 3.25 — while
-    // dedup_ensemble 6.58 vs 7.24 and graph_ppr 6.64 vs 6.35 show the
-    // retime HONEST and the coverage value flattering, so neither pass can
-    // substitute for the other). The residue survives 3+ quiet runs, so it
-    // is not window noise; it is end-of-sweep JVM state (C2 profile
-    // pollution from 630+ prior query runs) that no in-process hygiene can
-    // undo. Fix: stop APPROXIMATING an isolated JVM and fork one — the
-    // quiet pass now re-times each query in a fresh child JVM (same
-    // classpath, same module options, same heap, same env => same master/
-    // shuffle-partitions/conf overrides), which runs the same coverage
-    // method (best-of-RUNS noop-sink timing) for just that query and
-    // reports on its private stdout. The published value is still a pure
-    // single-method min; the method tag stays "retimed". In-process quiet
-    // retime kept verbatim as the fallback when spawning fails. Old-method
-    // artifacts kept: bench/r15_sf0.1_methodfix_c{32,8}.json.
-    def childRetime(name: String): Option[(String, Double)] =
-      try {
-        val javaBin = new java.io.File(new java.io.File(
-          System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-        val moduleOpts = org.apache.spark.launcher.JavaModuleOptions
-          .defaultModuleOptions().split("\\s+").filter(_.nonEmpty).toSeq
-        val heap = java.lang.management.ManagementFactory.getRuntimeMXBean
-          .getInputArguments.toArray.collect { case s: String
-            if s.startsWith("-Xmx") || s.startsWith("-Xms") => s }.toSeq
-        val cmd = Seq(javaBin) ++ moduleOpts ++ heap ++ Seq(
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-          "-cp", System.getProperty("java.class.path"), "graft.Bench")
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.environment().put("SPARK_GRAFT_CHILD", "1")
-        pb.environment().put("SPARK_GRAFT_ONLY", name)
-        pb.environment().put("SPARK_GRAFT_RETIME", "0")
-        pb.environment().put("SPARK_GRAFT_EMPTY_REPLAY", "0")
-        pb.redirectError(ProcessBuilder.Redirect.INHERIT)
-        val t0 = System.nanoTime()
-        val p = pb.start()
-        // drain stdout fully BEFORE waitFor (a filled pipe deadlocks both)
-        val out = scala.io.Source.fromInputStream(p.getInputStream)
-          .getLines().toList
-        val done = p.waitFor(15, java.util.concurrent.TimeUnit.MINUTES)
-        if (!done) { p.destroyForcibly(); p.waitFor() }
-        val wall = (System.nanoTime() - t0) / 1e9
-        val v = out.collect {
-          case l if l.startsWith(s"GRAFT_CHILD_RESULT $name ") =>
-            l.substring(s"GRAFT_CHILD_RESULT $name ".length).toDouble
-        }.headOption
-        if (!done || p.exitValue() != 0 || v.isEmpty) {
-          System.err.println(s"[bench] child retime $name unusable " +
-            s"(done=$done rc=${if (done) p.exitValue() else -1} " +
-            s"lines=${out.size}) — falling back in-process")
+    def childRetime(name: String): Option[Double] = {
+      val tag = s"GRAFT_CHILD_RESULT $name "
+      val t0 = System.nanoTime()
+      val got = runChild(childCmd,
+          Map("SPARK_GRAFT_CHILD" -> "1", "SPARK_GRAFT_ONLY" -> name), 15.minutes)
+        .flatMap { out =>
+          out.collectFirst { case l if l.startsWith(tag) => l.substring(tag.length) }
+            .flatMap(_.toDoubleOption).toRight(s"no result in ${out.size} lines")
+        }
+      val wall = (System.nanoTime() - t0) / 1e9
+      got match {
+        case Left(why) =>
+          System.err.println(s"[bench] child retime $name unusable ($why) " +
+            "— publishing its coverage value")
           None
-        } else {
+        case Right(t) =>
           System.err.println(
-            f"[bench] child retime $name: ${v.get}%.3f s (child wall $wall%.1f s)")
-          v.map(name -> _)
-        }
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] child retime $name spawn failed: " +
-          s"${e.getMessage} — falling back in-process")
-        None
+            f"[bench] child retime $name: $t%.3f s (child wall $wall%.1f s)")
+          Some(t)
       }
-    def inProcessRetime(name: String): Option[(String, Double)] =
-      try {
-        spark.catalog.clearCache()
-        val leaked = spark.sparkContext.getPersistentRDDs
-        if (leaked.nonEmpty) {
-          System.err.println(
-            s"[bench] retime $name: force-unpersisting ${leaked.size} leftover RDDs")
-          leaked.values.foreach(r =>
-            try r.unpersist(blocking = true)
-            catch { case _: Exception => () })
-        }
-        // drain the cleaner to a fixpoint of the shuffle-file count
-        // (bounded: ~8 rounds max, typical 2)
-        System.gc()
-        Thread.sleep(800)
-        var prev = -1L
-        var cur = localBlockFiles()
-        var drainRounds = 0
-        while (cur != prev && drainRounds < 8) {
-          Thread.sleep(500)
-          System.gc()
-          prev = cur; cur = localBlockFiles(); drainRounds += 1
-        }
-        System.err.println(
-          s"[bench] retime $name: drained in $drainRounds rounds, $cur files")
-        val sess = spark.newSession()
-        sess.conf.set("spark.sql.shuffle.partitions", cpus)
-        once(sess, byName(name)) // untimed JIT warmup (value discarded)
-        val base = (1 to runs).map(_ => once(sess, byName(name)))
-        // noise armor, the retime twin of the coverage pass's third-run
-        // rule: when the quiet window still reads far above the SAME
-        // query's own coverage value (which ran in a busier JVM), the
-        // window was externally polluted — take one more quiet run. The
-        // published value stays a pure retime-method min.
-        val cov = ok.toMap.get(name)
-        val ts = if (cov.exists(c => base.min > 1.25 * c))
-          base :+ once(sess, byName(name)) else base
-        Some(name -> ts.min)
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] retime $name FAILED: ${e.getMessage}")
-        None
-      }
-    def retimeOne(name: String): Option[(String, Double)] = {
-      val child = childRetime(name)
-      // noise armor, child edition: a single child JVM's best-of-RUNS can
-      // still catch an external hiccup. When the child reads far above the
-      // query's own coverage value, take ONE more child and keep the min —
-      // still a pure fresh-JVM-method value. (Queries whose honest
-      // isolated cost IS above coverage — e.g. dedup_ensemble, where the
-      // busy-sweep coverage pass flatters — just pay one redundant child.)
-      val armored = child.flatMap { case (n, t) =>
-        val cov = ok.toMap.get(n)
-        if (cov.exists(c => t > 1.25 * c))
-          childRetime(n).map { case (_, t2) => n -> math.min(t, t2) }
-            .orElse(Some(n -> t))
-        else Some(n -> t)
-      }
-      armored.orElse(inProcessRetime(name))
     }
+    // noise armor: a single child JVM's best-of-RUNS can still catch an
+    // external hiccup. When the child reads far above the query's own
+    // coverage value, take ONE more child and keep the min — still a pure
+    // fresh-JVM value. (Queries whose honest isolated cost IS above
+    // coverage — e.g. dedup_ensemble, where the busy-sweep coverage pass
+    // flatters — just pay one redundant child.)
+    def retimeOne(name: String): Option[Double] =
+      childRetime(name).map { t =>
+        if (coverage.get(name).exists(c => t > 1.25 * c))
+          childRetime(name).fold(t)(math.min(t, _))
+        else t
+      }
     // Retime to a FIXPOINT of the published set, not one pre-ranked batch:
     // candidates picked by coverage-pass rank alone can retime DOWN far
     // enough that coverage-rank-21+ queries slide into the published top-20
@@ -340,7 +235,7 @@ object Bench {
     while (retimeK > 0 && pending.nonEmpty) {
       pending.foreach { name =>
         attempted += name
-        retimeOne(name).foreach(retimedBuf += _)
+        retimeOne(name).foreach(t => retimedBuf += name -> t)
       }
       pending = currentFinal.sortBy(-_._2).take(retimeK).map(_._1)
         .filterNot(attempted)
@@ -393,7 +288,7 @@ object Bench {
             // set); one run where t dwarfs it — halves the pass-3 cost on
             // the heavy tail without moving any adjusted number that matters
             val n = if (t < 1.0) runs else 1
-            val ts = (1 to n).map(_ => once(spark, byName(name), ed))
+            val ts = (1 to n).map(_ => once(byName(name), ed))
             Some(name -> ts.min)
           } catch { case e: Throwable =>
             System.err.println(s"[bench] 1-row replay $name skipped: " +
@@ -430,7 +325,7 @@ object Bench {
     // coverage-pass raw values for the retimed set: the delta vs "retimed"
     // is the measured contention inflation, kept for honesty
     val raw = jmap(retimed.sortBy(-_._2).map { case (k, _) =>
-      k -> sec(ok.toMap.apply(k)) })
+      k -> sec(coverage(k)) })
     // errors stay on the stdout line (they are what the driver most needs)
     // but bounded — the bound is enforced against the ACTUAL line length
     // below, not assumed from entry counts (esc() can double quote-heavy

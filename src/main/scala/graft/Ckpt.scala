@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** THE lineage-truncation point — every operator that needs to cut a
   * long or re-derived lineage (iterative graph rounds, dedup pair lists,
@@ -168,23 +168,15 @@ object Ckpt {
   }
 
   /** Conf-gated frontier telemetry for the delta-iteration loops (LPA's
-    * changed set, CC's live edge set): `graft.graph.logFrontier=true`
-    * prints one `graft.frontier` line per round so a bench run can show
-    * the per-round shrink that justifies the active-frontier design.
-    * Costs one count job per round when enabled; free (no action, no
-    * plan change) when off — the default. */
-  def frontier(name: String, round: Int, df: DataFrame): Unit =
-    if (df.sparkSession.conf.getOption("graft.graph.logFrontier")
-        .exists(_.trim.equalsIgnoreCase("true")))
-      // scalastyle:off println
-      println(s"graft.frontier op=$name round=$round size=${df.count()}")
-      // scalastyle:on println
-
-  /** Overload for loops that already hold the frontier count (LPA's
-    * adaptive switch) — no extra job either way. */
-  def frontier(name: String, round: Int, size: Long): Unit =
-    if (org.apache.spark.sql.SparkSession.active.conf
-        .getOption("graft.graph.logFrontier")
+    * changed set, CC's live edge set): `graft.graph.logFrontier=true` on
+    * the loop's own session prints one `graft.frontier` line per round so
+    * a bench run can show the per-round shrink that justifies the
+    * active-frontier design. `size` is by name: a count job runs only
+    * when the flag is on; off — the default — it costs one conf lookup
+    * and no plan change. */
+  def frontier(spark: SparkSession, name: String, round: Int,
+               size: => Long): Unit =
+    if (spark.conf.getOption("graft.graph.logFrontier")
         .exists(_.trim.equalsIgnoreCase("true")))
       // scalastyle:off println
       println(s"graft.frontier op=$name round=$round size=$size")

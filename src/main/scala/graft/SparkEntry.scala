@@ -32,6 +32,38 @@ object SparkEntry {
       how = "detail",
       labels = Map("0A.1" -> "Alpha One", "0N.3" -> "November Three"))
 
+  /** The session Bench and Verify run in: `local[SPARK_GRAFT_CPUS]` with as
+    * many shuffle partitions, UTC, the graft extensions, and the
+    * `SPARK_GRAFT_CONF="k=v;k2=v2"` overrides for conf experiments (e.g.
+    * `graft.checkpoint.reliable=true` runs the registry through
+    * fault-tolerant checkpoints). The overrides go in before getOrCreate,
+    * so static confs take effect too. */
+  def harnessSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val builder = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+    confEntries(sys.env.getOrElse("SPARK_GRAFT_CONF", ""))
+      .foreach { case (k, v) => builder.config(k, v) }
+    val spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** `"k=v;k2=v2"` → `Seq(k -> v, k2 -> v2)`; a value may itself hold `=`.
+    * An entry without `=` fails, naming it — silently dropping it would
+    * run the experiment on the default config. */
+  private[graft] def confEntries(spec: String): Seq[(String, String)] =
+    spec.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      val parts = kv.split("=", 2)
+      require(parts.length == 2 && parts(0).nonEmpty,
+        s"bad SPARK_GRAFT_CONF entry: $kv")
+      parts(0) -> parts(1)
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(r => r.name -> r.run).toMap

@@ -1,29 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // conf experiments, same knob as Bench ("k=v;k2=v2") — e.g.
-    // graft.checkpoint.reliable=true runs the whole registry through
-    // fault-tolerant checkpoints (the cluster posture, see graft.Ckpt)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val parts = kv.split("=", 2)
-        require(parts.length == 2, s"bad SPARK_GRAFT_CONF entry: $kv")
-        spark.conf.set(parts(0), parts(1))
-      })
+    val spark = SparkEntry.harnessSession()
     new java.io.File(outDir).mkdirs()
     // corpus signature: the artifact must say WHICH corpus it verified
     // (round 6 closed green against data regenerated after the last test)

@@ -774,7 +774,7 @@ object Dedup {
       Ckpt.drop(live)
       live = next
       round += 1
-      Ckpt.frontier("cc_live", round, live)
+      Ckpt.frontier(live.sparkSession, "cc_live", round, live.count())
     }
     require(converged, s"connectedComponents did not converge in $maxIter rounds")
     // converged star forest: each non-root points at its component minimum

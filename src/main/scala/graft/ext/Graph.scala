@@ -546,7 +546,7 @@ object Graph {
       .select(col("node")).ckpt()
     var changedCnt = changed.count()
     val vCount = labels.count()
-    Ckpt.frontier("lpa", 1, changedCnt)
+    Ckpt.frontier(e.sparkSession, "lpa", 1, changedCnt)
     // superseded-checkpoint bookkeeping: the loop pins O(1) rounds of
     // O(V) state instead of every round until scope close — but the drop
     // must TRAIL BY TWO rounds, not one: a full round's `changed` is a
@@ -604,7 +604,7 @@ object Graph {
         labels = next
       }
       changedCnt = changed.count()
-      Ckpt.frontier("lpa", i, changedCnt)
+      Ckpt.frontier(e.sparkSession, "lpa", i, changedCnt)
       if (olderLabels ne null) {
         Ckpt.drop(olderLabels)
         Ckpt.drop(olderChanged)

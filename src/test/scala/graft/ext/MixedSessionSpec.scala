@@ -182,4 +182,17 @@ class MixedSessionSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       "pk", "bk", expectedItems = 100, numBits = 4096))
     assertKernels(joined, "might_contain")
   }
+
+  test("lpa frontier telemetry follows the frames' session, not the active one") {
+    val edges = frame(plain, Seq((1L, 2L), (2L, 3L), (1L, 3L),
+      (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L)), "src", "dst")
+    val log = new java.io.ByteArrayOutputStream()
+    plain.conf.set("graft.graph.logFrontier", "true")
+    try Console.withOut(log) {
+      active(Graph.labelPropagation(edges, iters = 5).collect())
+    } finally plain.conf.unset("graft.graph.logFrontier")
+    assert(!spark.conf.getOption("graft.graph.logFrontier").contains("true"))
+    assert(log.toString.linesIterator.exists(_.startsWith(
+      "graft.frontier op=lpa round=1 size=")), log.toString)
+  }
 }
