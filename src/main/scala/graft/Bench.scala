@@ -75,12 +75,8 @@ object Bench {
 
     // corpus signature up front: BENCH artifacts must say WHICH corpus they
     // measured (round 6 closed against data the driver regenerated later —
-    // schema drift was invisible in every artifact)
-    val corpusSig = graft.io.CorpusSig.summary(spark, sfDir)
-    graft.io.CorpusSig.perTable(spark, sfDir).foreach { case (n, m, h) =>
-      System.err.println(s"[corpus] $n schema=$h mtime=$m")
-    }
-    System.err.println(s"[corpus] signature=$corpusSig dir=$sfDir")
+    // the regeneration was invisible in every artifact)
+    val corpus = graft.io.Stage.corpus(sfDir)
 
     import BenchFormat.{esc, sec}
 
@@ -362,7 +358,7 @@ object Bench {
       s""""floor_adjusted":${sec(floorAdjusted)},""" +
       s""""n_empty_replayed":${emptyReplay.size},""" +
       s""""floor_adjusted_def":"${esc(floorAdjDef)}",""" +
-      s""""sf":"$sfDir","corpus":"${esc(corpusSig)}",""" +
+      s""""sf":"$sfDir","corpus":"${esc(corpus)}",""" +
       s""""metric":"total","value":${sec(total)},"unit":"sec""""
     // Degrade deterministically until the line FITS the 1,900-char budget:
     // full errors → shorter/fewer errors → no per-query map (summary +

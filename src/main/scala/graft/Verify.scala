@@ -9,11 +9,7 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     // corpus signature: the artifact must say WHICH corpus it verified
     // (round 6 closed green against data regenerated after the last test)
-    graft.io.CorpusSig.perTable(spark, sfDir).foreach { case (n, m, h) =>
-      System.err.println(s"[corpus] $n schema=$h mtime=$m")
-    }
-    System.err.println(
-      s"[corpus] signature=${graft.io.CorpusSig.summary(spark, sfDir)} dir=$sfDir")
+    graft.io.Stage.corpus(sfDir)
     // dev loop: SPARK_GRAFT_ONLY="a,b" dumps (and lists oracles for) just
     // those queries, so tools/compare.py checks a focused subset fast
     val only = sys.env.get("SPARK_GRAFT_ONLY")

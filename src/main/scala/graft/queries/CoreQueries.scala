@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.GraftColumn
 import org.apache.spark.sql.functions._
 import graft.functions.JaroWinkler
-import graft.io.Tables
+import graft.io.{Stage, Tables}
 import graft.ops.Recode._
 import graft.ops.Relational._
 import graft.ops.Reshape._
@@ -26,118 +26,11 @@ object CoreQueries {
   private[queries] val eventTypes =
     Seq("click", "error", "purchase", "signup", "view")
 
-  /** Staged inputs for the source-scan queries (S1/S4/S5): resolved once
-    * per (kind, corpus dir) per JVM, at a path STABLE across JVMs — a
-    * fresh temp dir per JVM would accrete full-table copies in /tmp on
-    * every bench/verify/test run until staging writes start failing. A
-    * `_graft_ok` marker gates cross-JVM reuse: staging that died
-    * half-written is wiped and rebuilt, never silently consumed. */
-  private val stageCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Collision-proof stage key: a truncated SHA-256 of kind+dir.
-    * `String.hashCode` is 32-bit — two different corpus dirs could land on
-    * one stage path and silently serve each other's data. */
-  private[queries] def stageDigest(kind: String, dir: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$kind:$dir".getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-
-  private def stableStageBase(kind: String, dir: String): java.nio.file.Path =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stage_${kind}_${stageDigest(kind, dir)}")
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Corpus version signature of one source parquet table: directory
-    * mtime + regular-file count. Cheap (no data read), and any
-    * regeneration of the table bumps it — the version key every staged
-    * artifact is published under. The walk stream is closed (an unclosed
-    * Files.walk leaks a directory fd per staging). An unreadable table
-    * throws (the java.nio exception names the path): a fallback key would
-    * let every unreadable corpus share one staged artifact. */
-  private[queries] def corpusSig(dir: String, file: String): String = {
-    val src = java.nio.file.Paths.get(dir, file)
-    val mt = java.nio.file.Files.getLastModifiedTime(src).toMillis
-    val walk = java.nio.file.Files.walk(src)
-    val sz =
-      try walk.filter(java.nio.file.Files.isRegularFile(_)).count()
-      finally walk.close()
-    s"${mt}_$sz"
-  }
-
-  /** Versioned staged artifact with atomic publish — the write-new-
-    * version-then-flip contract every corpus-derived staging follows
-    * (band+shingle index, ANN index, bucketed edge files, BPE merges):
-    *
-    *   <base>/v_<sig>/      immutable version dirs. Built in a private
-    *                        temp dir, `_graft_ok` marker created INSIDE,
-    *                        then ATOMIC_MOVE'd into place — no reader
-    *                        ever sees a partial version.
-    *   <base>/MANIFEST      one line naming the current version, flipped
-    *                        by temp-file + ATOMIC_MOVE only AFTER the
-    *                        version dir committed.
-    *
-    * Readers hold a complete version dir by construction (resolution
-    * returns the version path, never the mutable base), so a re-stage
-    * racing a reader can never show it partial or mixed state — the old
-    * version stays intact until GC. GC runs after each flip and deletes
-    * superseded `v_*` dirs EXCEPT (a) the version the manifest named
-    * before this flip (grace for readers that resolved just before the
-    * corpus changed), and (b) anything modified in the last 10 minutes
-    * (grace for a concurrent builder between its rename and its flip).
-    * The base path is keyed by (family, corpus dir), so stagings of
-    * different corpora never GC each other. */
-  private[queries] def stageVersioned(family: String, sig: String,
-                                      dir: String)
-                                     (create: String => Unit): String =
-    stageCache.computeIfAbsent(s"$family:$sig:$dir", { _ =>
-      import java.nio.file.{Files, StandardCopyOption}
-      require(!family.contains("_"),
-        s"stage family must be underscore-free (GC lists by prefix): $family")
-      val base = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_stagefam_${family}_${stageDigest(family, dir)}")
-      Files.createDirectories(base)
-      val ver = base.resolve(s"v_$sig")
-      val ok = ver.resolve("_graft_ok")
-      if (!Files.exists(ok)) {
-        val tmp = Files.createTempDirectory(base, s"build.")
-        create(tmp.resolve("data").toString)
-        Files.createFile(tmp.resolve("_graft_ok"))
-        if (Files.exists(ver) && !Files.exists(ok)) rmTree(ver.toFile)
-        try Files.move(tmp, ver, StandardCopyOption.ATOMIC_MOVE)
-        catch { case e: java.nio.file.FileSystemException =>
-          // only a race loss (another JVM committed this version first)
-          // is recoverable — its marker must be in place
-          if (Files.exists(ok)) rmTree(tmp.toFile) else throw e
-        }
-        // flip the manifest to the committed version, then GC superseded
-        // versions outside the grace set
-        val man = base.resolve("MANIFEST")
-        val prev =
-          if (Files.exists(man)) Some(Files.readString(man).trim) else None
-        if (!prev.contains(s"v_$sig")) {
-          val mtmp = Files.createTempFile(base, "MANIFEST.", ".tmp")
-          Files.writeString(mtmp, s"v_$sig")
-          Files.move(mtmp, man, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        }
-        val keep = Set(s"v_$sig") ++ prev
-        val graceMs = System.currentTimeMillis() - 10 * 60 * 1000L
-        Option(base.toFile.listFiles).foreach(_.filter { f =>
-          f.getName.startsWith("v_") && !keep(f.getName) &&
-            f.lastModified() < graceMs
-        }.foreach(rmTree))
-      }
-      ver.resolve("data").toString
-    })
-
   /** Stage the merge-on-read base + delta artifacts once per corpus —
     * the append-only write side of the sink_merge_on_read pattern. */
   private def stagedMergeOnRead(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String = {
-    stageVersioned("mor", corpusSig(dir, "orders.parquet"), dir) { path =>
+    Stage.versioned("mor", dir, "orders") { path =>
       val o = graft.io.Tables(s, dir).orders
       val base = o.select("o_orderkey", "o_custkey", "o_totalprice",
         "o_orderstatus")
@@ -156,53 +49,6 @@ object CoreQueries {
     }
   }
 
-  /** Like [[stageVersioned]] but the staging RUNS each JVM (still once per JVM,
-    * still at the stable path): for stagings that register in-memory
-    * catalog state — the bucketed tables — which the files alone cannot
-    * restore in a fresh session. Overwrite-mode writes keep the path from
-    * accreting; an OS file lock serializes concurrent JVMs so two sessions
-    * never interleave writes into the same stage. */
-  /** Row count of a staged parquet layout, memoized beside it as
-    * count.txt — stage dirs created before the file existed (earlier
-    * rounds) backfill it once, best-effort. */
-  private[queries] def stagedCount(s: org.apache.spark.sql.SparkSession,
-                                   stageDir: String, file: String): Long = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val cp = Paths.get(s"$stageDir/count.txt")
-    // The backfill write below is concurrent with other family JVMs; a
-    // reader must never see (or fail on) a partial file, so parse
-    // defensively and publish via temp-file + atomic move.
-    val memo =
-      if (Files.exists(cp))
-        try Some(Files.readString(cp).trim.toLong)
-        catch { case _: NumberFormatException => None }
-      else None
-    memo.getOrElse {
-      val n = s.read.parquet(s"$stageDir/$file").count()
-      try {
-        val tmp = Files.createTempFile(Paths.get(stageDir), "count.", ".tmp")
-        Files.writeString(tmp, n.toString)
-        Files.move(tmp, cp, StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-        ()
-      } catch { case _: Exception => () }
-      n
-    }
-  }
-
-  private[queries] def stageEachJvm(kind: String, dir: String)(create: String => Unit): String =
-    stageCache.computeIfAbsent(s"$kind:$dir", { _ =>
-      import java.nio.file.{Files, StandardOpenOption}
-      val base = stableStageBase(kind, dir)
-      Files.createDirectories(base)
-      val data = base.resolve("data").toString
-      val ch = java.nio.channels.FileChannel.open(base.resolve("_graft_lock"),
-        StandardOpenOption.CREATE, StandardOpenOption.WRITE)
-      try { val lk = ch.lock(); try create(data) finally lk.release() }
-      finally ch.close()
-      data
-    })
-
   val all: Seq[Reg] = Seq(
 
     // S1: JDBC scan with full query pushdown, oracle-checked — the nation
@@ -215,10 +61,10 @@ object CoreQueries {
       """SELECT n_nationkey, n_name, n_regionkey FROM nation
         |WHERE n_regionkey IN (0, 1)""".stripMargin))(
       (s, dir) => {
-        val db = stageVersioned("derby", corpusSig(dir, "nation.parquet"), dir) { p =>
+        val db = Stage.versioned("derby", dir, "nation") { p =>
           graft.io.Sinks.jdbc(Tables(s, dir).nation,
             s"jdbc:derby:$p;create=true", "graft_nation", numPartitions = 1)
-          // release Derby's file locks BEFORE stageVersioned renames the dir —
+          // release Derby's file locks BEFORE Stage.versioned renames the dir —
           // the booted instance pins the moved inode and the post-move
           // boot would see a live lock ("already booted")
           try java.sql.DriverManager.getConnection(s"jdbc:derby:$p;shutdown=true")
@@ -236,7 +82,7 @@ object CoreQueries {
       "SELECT n_nationkey, n_name, n_regionkey FROM nation"))(
       (s, dir) => {
         val nation = Tables(s, dir).nation
-        val path = stageVersioned("tsv", corpusSig(dir, "nation.parquet"), dir) { p =>
+        val path = Stage.versioned("tsv", dir, "nation") { p =>
           graft.io.Sinks.tsv(nation.coalesce(1), p)
         }
         graft.io.Sources.tsv(s, path, schema = Some(nation.schema))
@@ -249,7 +95,7 @@ object CoreQueries {
       "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer"))(
       (s, dir) => {
         val customer = Tables(s, dir).customer
-        val path = stageVersioned("csv", corpusSig(dir, "customer.parquet"), dir) { p =>
+        val path = Stage.versioned("csv", dir, "customer") { p =>
           graft.io.Sinks.csv(customer.coalesce(1), p)
         }
         graft.io.Sources.csv(s, path, schema = Some(customer.schema))
@@ -264,7 +110,7 @@ object CoreQueries {
         |  o_orderdate, o_orderpriority FROM orders""".stripMargin))(
       (s, dir) => {
         val orders = Tables(s, dir).orders
-        val path = stageVersioned("jsonl", corpusSig(dir, "orders.parquet"), dir) { p =>
+        val path = Stage.versioned("jsonl", dir, "orders") { p =>
           graft.io.Sinks.jsonl(orders, p)
         }
         graft.io.Sources.jsonl(s, path, orders.schema)
@@ -284,7 +130,7 @@ object CoreQueries {
         |WHERE l_shipdate >= TIMESTAMP '1995-06-01'
         |  AND l_shipdate < TIMESTAMP '1995-09-01'""".stripMargin))(
       (s, dir) => {
-        val path = stageVersioned("sortedparquet", corpusSig(dir, "lineitem.parquet"), dir) { p =>
+        val path = Stage.versioned("sortedparquet", dir, "lineitem") { p =>
           graft.io.Sinks.parquetSorted(
             Tables(s, dir).lineitem
               .select("l_orderkey", "l_linenumber", "l_shipdate", "l_quantity"),
@@ -315,7 +161,7 @@ object CoreQueries {
          |FROM orders""".stripMargin))(
       (s, dir) => {
         import org.apache.spark.sql.types._
-        val path = stageVersioned("jsonlbad", corpusSig(dir, "orders.parquet"), dir) { p =>
+        val path = Stage.versioned("jsonlbad", dir, "orders") { p =>
           Tables(s, dir).orders
             .select(when(col("o_orderkey") % 10 === 0, lit("{broken"))
               .otherwise(to_json(struct(col("o_orderkey"), col("o_totalprice"))))
@@ -343,7 +189,7 @@ object CoreQueries {
     Reg("orc_roundtrip", Some(
       "SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice FROM part"))(
       (s, dir) => {
-        val path = stageVersioned("orc", corpusSig(dir, "part.parquet"), dir) { p =>
+        val path = Stage.versioned("orc", dir, "part") { p =>
           graft.io.Sinks.orc(Tables(s, dir).part, p)
         }
         graft.io.Sources.orc(s, path)
@@ -359,7 +205,7 @@ object CoreQueries {
       "SELECT s_suppkey, s_name, s_nationkey, s_acctbal FROM supplier"))(
       (s, dir) => {
         val supplier = Tables(s, dir).supplier
-        val path = stageVersioned("csvrt", corpusSig(dir, "supplier.parquet"), dir) { p =>
+        val path = Stage.versioned("csvrt", dir, "supplier") { p =>
           graft.io.Sinks.csv(supplier, p)
         }
         graft.io.Sources.csv(s, path, schema = Some(supplier.schema))
@@ -377,7 +223,7 @@ object CoreQueries {
         |SELECT doc_id, NULL AS text, lang FROM documents
         |WHERE doc_id % 2 = 1""".stripMargin))(
       (s, dir) => {
-        val path = stageVersioned("schemaevo", corpusSig(dir, "documents.parquet"), dir) { p =>
+        val path = Stage.versioned("schemaevo", dir, "documents") { p =>
           val d = Tables(s, dir).documents
           graft.io.Sinks.parquet(
             d.where(col("doc_id") % 2 === 0).select("doc_id", "text"),
@@ -398,7 +244,7 @@ object CoreQueries {
     Reg("compact_scan", Some(
       "SELECT doc_id, text, lang, source, n_chars FROM documents"))(
       (s, dir) => {
-        val path = stageVersioned("compact", corpusSig(dir, "documents.parquet"), dir) { p =>
+        val path = Stage.versioned("compact", dir, "documents") { p =>
           Tables(s, dir).documents.repartition(64)
             .write.mode("overwrite").parquet(s"$p/small")
           val (before, after) = graft.io.Sinks.compact(
@@ -419,7 +265,7 @@ object CoreQueries {
       """SELECT o_orderkey, o_custkey, o_totalprice, o_orderpriority FROM orders
         |WHERE o_orderpriority = '1-URGENT'""".stripMargin))(
       (s, dir) => {
-        val path = stageVersioned("partparquet", corpusSig(dir, "orders.parquet"), dir) { p =>
+        val path = Stage.versioned("partparquet", dir, "orders") { p =>
           graft.io.Sinks.parquet(
             Tables(s, dir).orders
               .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority"),
@@ -654,34 +500,14 @@ object CoreQueries {
          |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
          |GROUP BY o_orderpriority""".stripMargin))(
       (s, dir) => {
-        val sig = corpusSig(dir, "lineitem.parquet")
-        val sfx = stageDigest("bucketed", dir)
-        val (tl, to) = (s"bkt_lineitem_$sfx", s"bkt_orders_$sfx")
-        // bucketed FILES once per corpus version (atomic publish — a
-        // reader in another JVM can never race a half-rewritten table);
-        // per JVM only the catalog MOUNT (Sinks.mountBucketed), the
-        // metadata a production metastore would persist for free
-        val p = stageVersioned("jbktf", sig, dir) { p =>
-          val t = Tables(s, dir)
-          s.sql(s"DROP TABLE IF EXISTS ${tl}_build")
-          s.sql(s"DROP TABLE IF EXISTS ${to}_build")
-          graft.io.Sinks.writeBucketed(t.lineitem.select("l_orderkey", "l_quantity"),
-            s"${tl}_build", "l_orderkey", 16, sortCol = Some("l_orderkey"),
-            path = Some(s"$p/$tl"))
-          graft.io.Sinks.writeBucketed(t.orders.select("o_orderkey", "o_orderpriority"),
-            s"${to}_build", "o_orderkey", 16, sortCol = Some("o_orderkey"),
-            path = Some(s"$p/$to"))
-          s.sql(s"DROP TABLE IF EXISTS ${tl}_build") // external: files remain
-          s.sql(s"DROP TABLE IF EXISTS ${to}_build")
-          ()
+        // bucketed FILES once per corpus version, per JVM only the catalog
+        // MOUNT — the metadata a production metastore would persist for free
+        val t = Tables(s, dir)
+        val tl = Stage.bucketed(s, "jbktl", dir, "lineitem")("l_orderkey", 16) {
+          t.lineitem.select("l_orderkey", "l_quantity")
         }
-        stageEachJvm(s"jbktmnt_$sig", dir) { _ =>
-          graft.io.Sinks.mountBucketed(s, tl,
-            s.read.parquet(s"$p/$tl").schema,
-            "l_orderkey", 16, Some("l_orderkey"), s"$p/$tl")
-          graft.io.Sinks.mountBucketed(s, to,
-            s.read.parquet(s"$p/$to").schema,
-            "o_orderkey", 16, Some("o_orderkey"), s"$p/$to")
+        val to = Stage.bucketed(s, "jbkto", dir, "orders")("o_orderkey", 16) {
+          t.orders.select("o_orderkey", "o_orderpriority")
         }
         s.table(tl).join(s.table(to), col("l_orderkey") === col("o_orderkey"))
           .groupBy("o_orderpriority")
@@ -728,7 +554,7 @@ object CoreQueries {
         |WHERE l_partkey BETWEEN 200 AND 400 AND l_suppkey BETWEEN 10 AND 40"""
         .stripMargin))(
       (s, dir) => {
-        val path = stageVersioned("zorder", corpusSig(dir, "lineitem.parquet"), dir) { p =>
+        val path = Stage.versioned("zorder", dir, "lineitem") { p =>
           graft.ops.Layout.writeZOrdered(
             Tables(s, dir).lineitem.select("l_partkey", "l_suppkey", "l_extendedprice"),
             p, "l_partkey", "l_suppkey", numFiles = 4, bits = 20)

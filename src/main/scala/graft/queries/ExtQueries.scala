@@ -3,7 +3,7 @@ import graft.Ckpt.CkptOps
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.io.Tables
+import graft.io.{Stage, Tables}
 import graft.ops.Relational._
 import graft.functions.Time.{tsMicros, tsSeconds}
 import CoreQueries.sqlDsum
@@ -1744,10 +1744,7 @@ object ExtQueries {
           .agg(dsum(col("l_quantity")).as("sum_qty"), count(lit(1)).as("n_rows"))
         // stable per-corpus path + Overwrite mode: repeated runs exercise
         // the write every time without accreting temp dirs
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_sink_roundtrip_${Integer.toHexString(dir.hashCode)}",
-          "a1.parquet").toString
+        val path = s"${Stage.scratch("sinkroundtrip", dir)}/a1.parquet"
         graft.io.Sinks.parquet(out, path)
         s.read.parquet(path)
       }),
@@ -1770,11 +1767,7 @@ object ExtQueries {
           .agg(count(lit(1)).as("n"),
             sum(floor(col("o_totalprice") * 100 + 0.5).cast("long"))
               .as("cents"))
-        val p = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_xlsx_roundtrip_${Integer.toHexString(dir.hashCode)}")
-        java.nio.file.Files.createDirectories(p)
-        val path = p.resolve("report.xlsx").toString
+        val path = s"${Stage.scratch("xlsxroundtrip", dir)}/report.xlsx"
         graft.io.Sinks.xlsx(out, path, sheet = "orders")
         graft.io.Sources.xlsx(s, path, out.schema)
       }),
@@ -1794,10 +1787,7 @@ object ExtQueries {
          |FROM events GROUP BY event_type""".stripMargin))(
       (s, dir) => {
         val ev = Tables(s, dir).events.select("event_type", "value")
-        val path = java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_sink_dynpart_${Integer.toHexString(dir.hashCode)}",
-          "events.parquet").toString
+        val path = s"${Stage.scratch("sinkdynpart", dir)}/events.parquet"
         graft.io.Sinks.parquet(ev, path, partitionCols = Seq("event_type"))
         val incr = ev.where(col("event_type") === "click")
           .withColumn("value", col("value") * 2)
@@ -3162,8 +3152,7 @@ object ExtQueries {
             .distinct(),
           s"$tmp/hitspairs.parquet")
         val hp = s.read.parquet(s"$tmp/hitspairs.parquet")
-        val hb = math.max(1L, math.min(32L, (hp.count() + 1999999L) / 2000000L))
-          .toInt
+        val hb = Stage.buckets(hp.count())
         bkt(hp, "graft_ingest_lay_hs", "src", hb, s"$tmp/hits_bysrc")
         bkt(hp, "graft_ingest_lay_hd", "dst", hb, s"$tmp/hits_bydst")
         // 4. rank-family purchase edges, bidirected + outdeg, bucketed by
@@ -3178,8 +3167,7 @@ object ExtQueries {
         val pp = s.read.parquet(s"$tmp/purpairs.parquet")
         val pe = pp.unionAll(
           pp.select(col("dst").as("src"), col("src").as("dst")))
-        val pb = math.max(1L,
-          math.min(32L, (pp.count() * 2 + 1999999L) / 2000000L)).toInt
+        val pb = Stage.buckets(pp.count() * 2)
         bkt(pe.join(
             pe.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")),
             Seq("src")),
@@ -3917,18 +3905,16 @@ object ExtQueries {
         val (pairsPath, tbl) = stagedCopurchaseEdges(s, dir)
         // loop session (round 14): |E|-matched parallelism + AQE off for
         // the label rounds — same rationale as the rank family
-        val sess = rankSession(s, copurchasePairCount(s, pairsPath) * 2)
+        val sess = rankSession(s, copurchasePairCount(pairsPath) * 2)
         graft.ext.Graph.labelPropagationBucketed(sess.table(tbl), iters = 5)
       })
   }
 
-  /** Canonical-pair count of the staged co-purchase layout (cached
-    * count.txt beside the artifact via [[CoreQueries.stagedCount]]) —
-    * the |E|/2 the loop sessions match their parallelism to. */
-  private def copurchasePairCount(s: org.apache.spark.sql.SparkSession,
-                                  pairsPath: String): Long =
-    CoreQueries.stagedCount(s,
-      pairsPath.stripSuffix("/pairs.parquet"), "pairs.parquet")
+  /** Canonical-pair count of the staged co-purchase layout (count.txt
+    * beside the pair list) — the |E|/2 the loop sessions match their
+    * parallelism to. */
+  private def copurchasePairCount(pairsPath: String): Long =
+    Stage.count(pairsPath.stripSuffix("/pairs.parquet"))
 
   /** The co-purchase part-graph edge derivation every graph_* entry
     * shares, as a Spark frame (bidirected; the library ops canonicalize). */
@@ -3949,8 +3935,7 @@ object ExtQueries {
     * corpus. Same mtime-keyed staging as the BPE merge artifact. */
   private def stagedHllSketches(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String = {
-    CoreQueries.stageVersioned("hllsk",
-        CoreQueries.corpusSig(dir, "events.parquet"), dir) { path =>
+    Stage.versioned("hllsk", dir, "events") { path =>
       graft.io.Sinks.parquet(
         Tables(s, dir).events.groupBy("event_type")
           .agg(expr("hll_sketch_agg(user_id, 12)").as("sk")),
@@ -3961,49 +3946,27 @@ object ExtQueries {
   /** Stage the co-purchase part graph ONCE per corpus — the layout an
     * ingest pipeline writes so every iterative consumer stops paying the
     * basket self-join + distinct per run: the canonical a ≤ b pair list
-    * as parquet (CC / modularity input) and the BIDIRECTED edge table
-    * written BUCKETED BY src, 32 buckets ([[graft.io.Sinks
-    * .writeBucketed]]) so per-round src-joins read a pre-shuffled layout
-    * (no Exchange on the edge input — PlanSpec pins it). Bucketed tables
-    * are catalog state, so registration re-runs per JVM (stageEachJvm)
-    * while the files persist at the stable stage path.
-    * Returns (pairsPath, bucketedTableName). */
+    * as parquet (CC / modularity input, pair count in count.txt) and the
+    * BIDIRECTED edge table bucketed by src, 32 buckets
+    * ([[graft.io.Stage.bucketed]]) so per-round src-joins read a
+    * pre-shuffled layout (no Exchange on the edge input — PlanSpec pins
+    * it). Returns (pairsPath, bucketedTableName). */
   private def stagedCopurchaseEdges(
       s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String) = {
-    // the pair DERIVATION (basket self-join + distinct) stages once per
-    // corpus; only the bucketed CATALOG registration re-runs per JVM
-    // (bucket metadata lives in the in-memory catalog — a production
-    // metastore persists it and skips this too)
-    val sig = CoreQueries.corpusSig(dir, "lineitem.parquet")
-    val pairsDir = CoreQueries.stageVersioned("coedges", sig, dir) { path =>
+    val pairsDir = Stage.versioned("coedges2", dir, "lineitem") { path =>
       graft.io.Sinks.parquet(
         copurchaseEdges(s, dir)
           .select(least(col("src"), col("dst")).as("a"),
             greatest(col("src"), col("dst")).as("b"))
           .where(col("a") =!= col("b")).distinct(),
         s"$path/pairs.parquet")
+      Stage.writeCount(s, path, "pairs.parquet")
     }
-    val sfx = CoreQueries.stageDigest("coedgesbkt", dir)
-    val tbl = s"graft_edges_$sfx"
-    // bucketed FILES once per corpus; per JVM only the catalog MOUNT —
-    // the per-JVM E-sized rewrite this replaced was the first graph
-    // query's dominant window cost (round 13; Sinks.mountBucketed)
-    val bktDir = CoreQueries.stageVersioned("coedgesbktf", sig, dir) { path =>
+    val tbl = Stage.bucketed(s, "coedgesbkt", dir, "lineitem")("src", 32) {
       val pr = s.read.parquet(s"$pairsDir/pairs.parquet")
-      val build = s"${tbl}_build"
-      s.sql(s"DROP TABLE IF EXISTS $build")
-      graft.io.Sinks.writeBucketed(
-        pr.select(col("a").as("src"), col("b").as("dst"))
-          .unionAll(pr.select(col("b").as("src"), col("a").as("dst"))),
-        build, "src", 32, sortCol = Some("src"), path = Some(s"$path/files"))
-      s.sql(s"DROP TABLE IF EXISTS $build") // external: files remain
-      ()
-    }
-    CoreQueries.stageEachJvm(s"coedgesmnt_$sig", dir) { _ =>
-      graft.io.Sinks.mountBucketed(s, tbl,
-        s.read.parquet(s"$bktDir/files").schema,
-        "src", 32, Some("src"), s"$bktDir/files")
+      pr.select(col("a").as("src"), col("b").as("dst"))
+        .unionAll(pr.select(col("b").as("src"), col("a").as("dst")))
     }
     (s"$pairsDir/pairs.parquet", tbl)
   }
@@ -4023,8 +3986,7 @@ object ExtQueries {
   private def stagedCopurchaseCounts(
       s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
-    val sig = CoreQueries.corpusSig(dir, "lineitem.parquet")
-    CoreQueries.stageVersioned("cocnts", sig, dir) { path =>
+    Stage.versioned("cocnts", dir, "lineitem") { path =>
       val op = Tables(s, dir).lineitem
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
         .distinct()
@@ -4047,60 +4009,40 @@ object ExtQueries {
     * rank family (round-13 demand: graph_pagerank/graph_ppr were the
     * last per-run edge derivations, 85.6/94.6 s at sf10): the directed
     * distinct (custkey·2 → suppkey·2+1) pair list as parquet, and the
-    * BIDIRECTED edge table annotated with per-src out-degree, written
-    * BUCKETED BY src, 32 buckets, so every power-iteration round's
-    * src-join reads a pre-shuffled layout with outdeg already on the
-    * edge row — no derivation join, no degree join, no Exchange on the
-    * edge input (PlanSpec pins it). Returns (pairsPath, tableName,
+    * BIDIRECTED edge table annotated with per-src out-degree, bucketed
+    * by src, so every power-iteration round's src-join reads a
+    * pre-shuffled layout with outdeg already on the edge row — no
+    * derivation join, no degree join, no Exchange on the edge input
+    * (PlanSpec pins it). Returns (pairsPath, tableName,
     * bidirectedEdgeCount). */
   private def stagedPurchaseEdges(
       s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, Long) = {
-    val sig = CoreQueries.corpusSig(dir, "lineitem.parquet")
-    val pairsDir = CoreQueries.stageVersioned("puredges", sig, dir) { path =>
-      val t = Tables(s, dir)
-      graft.io.Sinks.parquet(
-        t.orders
-          .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
-          .select((col("o_custkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .distinct(),
-        s"$path/pairs.parquet")
-      // directed-pair count beside the layout — consumers match their
-      // round parallelism to |E| = 2·pairs (Graph.rankParallelism)
-      val n = s.read.parquet(s"$path/pairs.parquet").count()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$path/count.txt"), n.toString)
+    val pairsDir = Stage.versioned("puredges2", dir, "orders", "lineitem") {
+      path =>
+        val t = Tables(s, dir)
+        graft.io.Sinks.parquet(
+          t.orders
+            .join(t.lineitem, col("o_orderkey") === col("l_orderkey"))
+            .select((col("o_custkey") * 2).as("src"),
+              (col("l_suppkey") * 2 + 1).as("dst"))
+            .distinct(),
+          s"$path/pairs.parquet")
+        // directed-pair count beside the layout — consumers match their
+        // round parallelism to |E| = 2·pairs (Graph.rankParallelism)
+        Stage.writeCount(s, path, "pairs.parquet")
     }
-    val nEdges =
-      CoreQueries.stagedCount(s, pairsDir, "pairs.parquet") * 2
-    val buckets = math.max(1L, math.min(32L, (nEdges + 1999999L) / 2000000L))
-      .toInt
-    val sfx = CoreQueries.stageDigest("puredgesbkt", dir)
-    val tbl = s"graft_puredges_$sfx"
-    // bucketed FILES once per corpus; per JVM only the catalog MOUNT
-    // (Sinks.mountBucketed) — re-writing E rows per JVM to restore
-    // in-memory bucket metadata was the first consumer's dominant cost
-    val bktDir = CoreQueries.stageVersioned("puredgesbktf", sig, dir) { path =>
+    val nEdges = Stage.count(pairsDir) * 2
+    val tbl = Stage.bucketed(s, "puredgesbkt", dir, "orders", "lineitem")(
+        "src", Stage.buckets(nEdges)) {
       val pr = s.read.parquet(s"$pairsDir/pairs.parquet")
       // parity-disjoint encoding ⇒ the swapped set never overlaps the
       // forward set, so unionAll here equals the oracle's UNION
       val e = pr.unionAll(
         pr.select(col("dst").as("src"), col("src").as("dst")))
-      val withDeg = e.join(
+      e.join(
         e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")),
         Seq("src"))
-      val build = s"${tbl}_build"
-      s.sql(s"DROP TABLE IF EXISTS $build")
-      graft.io.Sinks.writeBucketed(withDeg, build, "src", buckets,
-        sortCol = Some("src"), path = Some(s"$path/files"))
-      s.sql(s"DROP TABLE IF EXISTS $build") // external: files remain
-      ()
-    }
-    CoreQueries.stageEachJvm(s"puredgesmnt_$sig", dir) { _ =>
-      graft.io.Sinks.mountBucketed(s, tbl,
-        s.read.parquet(s"$bktDir/files").schema,
-        "src", buckets, Some("src"), s"$bktDir/files")
     }
     (s"$pairsDir/pairs.parquet", tbl, nEdges)
   }
@@ -4108,16 +4050,15 @@ object ExtQueries {
   /** Stage the DIRECTED customer→part purchase bipartite graph ONCE per
     * corpus for the HITS family — the round-13 verdict's last per-run
     * edge derivation: the distinct (o_custkey, l_partkey) pair list,
-    * written bucketed in BOTH orientations (by src AND by dst, same
-    * rows), because HITS alternates an authority half-round joining on
-    * src with a hub half-round joining on dst and one layout cannot
-    * serve both Exchange-free. Per JVM only the two catalog mounts.
-    * Returns (tableBySrc, tableByDst, edgeCount). */
+    * bucketed in BOTH orientations (by src AND by dst, same rows),
+    * because HITS alternates an authority half-round joining on src with
+    * a hub half-round joining on dst and one layout cannot serve both
+    * Exchange-free. Returns (tableBySrc, tableByDst, edgeCount). */
   private def stagedHitsEdges(
       s: org.apache.spark.sql.SparkSession,
       dir: String): (String, String, Long) = {
-    val sig = CoreQueries.corpusSig(dir, "lineitem.parquet")
-    val pairsDir = CoreQueries.stageVersioned("hitsedges", sig, dir) { path =>
+    val tables = Seq("orders", "lineitem")
+    val pairsDir = Stage.versioned("hitsedges2", dir, tables: _*) { path =>
       val t = Tables(s, dir)
       graft.io.Sinks.parquet(
         t.orders
@@ -4125,36 +4066,15 @@ object ExtQueries {
           .select(col("o_custkey").as("src"), col("l_partkey").as("dst"))
           .distinct(),
         s"$path/pairs.parquet")
-      val n = s.read.parquet(s"$path/pairs.parquet").count()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$path/count.txt"), n.toString)
+      Stage.writeCount(s, path, "pairs.parquet")
     }
-    val nEdges = CoreQueries.stagedCount(s, pairsDir, "pairs.parquet")
-    val buckets = math.max(1L, math.min(32L, (nEdges + 1999999L) / 2000000L))
-      .toInt
-    val sfx = CoreQueries.stageDigest("hitsedgesbkt", dir)
-    val (ts, td) = (s"graft_hits_src_$sfx", s"graft_hits_dst_$sfx")
-    val bktDir = CoreQueries.stageVersioned("hitsedgesbktf", sig, dir) {
-      path =>
-        val pr = s.read.parquet(s"$pairsDir/pairs.parquet")
-        for ((bcol, sub, bld) <- Seq(("src", "bysrc", s"${ts}_build"),
-                                     ("dst", "bydst", s"${td}_build"))) {
-          s.sql(s"DROP TABLE IF EXISTS $bld")
-          graft.io.Sinks.writeBucketed(pr, bld, bcol, buckets,
-            sortCol = Some(bcol), path = Some(s"$path/$sub"))
-          s.sql(s"DROP TABLE IF EXISTS $bld") // external: files remain
-        }
-        ()
-    }
-    CoreQueries.stageEachJvm(s"hitsedgesmnt_$sig", dir) { _ =>
-      graft.io.Sinks.mountBucketed(s, ts,
-        s.read.parquet(s"$bktDir/bysrc").schema,
-        "src", buckets, Some("src"), s"$bktDir/bysrc")
-      graft.io.Sinks.mountBucketed(s, td,
-        s.read.parquet(s"$bktDir/bydst").schema,
-        "dst", buckets, Some("dst"), s"$bktDir/bydst")
-    }
-    (ts, td, nEdges)
+    val nEdges = Stage.count(pairsDir)
+    def layout(family: String, bucketCol: String): String =
+      Stage.bucketed(s, family, dir, tables: _*)(
+          bucketCol, Stage.buckets(nEdges)) {
+        s.read.parquet(s"$pairsDir/pairs.parquet")
+      }
+    (layout("hitssrc", "src"), layout("hitsdst", "dst"), nEdges)
   }
 
   /** Child session carrying |E|-matched shuffle parallelism for a rank
@@ -4285,7 +4205,7 @@ object ExtQueries {
         val (pairsPath, tbl) = stagedCopurchaseEdges(s, dir)
         // loop session (round 14): the LPA rounds AND the modularity
         // aggregations run |E|-matched with AQE off (rank-family rationale)
-        val sess = rankSession(s, copurchasePairCount(s, pairsPath) * 2)
+        val sess = rankSession(s, copurchasePairCount(pairsPath) * 2)
         graft.ext.Graph.modularity(sess.read.parquet(pairsPath),
           graft.ext.Graph.labelPropagationBucketed(sess.table(tbl), iters = 5),
           canonical = true)

@@ -3,7 +3,7 @@ import graft.Ckpt.CkptOps
 
 import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, Multimodal, Packing, Paragraphs, Sampling, Similarity, TextOps}
-import graft.io.Tables
+import graft.io.{Stage, Tables}
 
 /** Registry entries for the LLM-data-pipeline layer (SURVEY.md §2.11) over
   * `documents` / `embeddings`. SQL-expressible operators get a DuckDB
@@ -118,16 +118,10 @@ object LlmQueries {
        |) WHERE rank <= $limit""".stripMargin
   }
 
-  /** Stage the even-doc corpus's near-dup index (band + shingle tables,
-    * [[Dedup.corpusNearDupIndex]]) once per corpus — the ingest-time write
-    * of the production incremental-dedup path. The stage key carries the
-    * documents file's mtime+size, so a driver-regenerated corpus at the
-    * same path restages instead of serving a stale index (the failure mode
-    * CorpusSig exists to surface). */
   /** Stage the word co-occurrence graph ONCE per corpus for
     * text_keywords' TextRank: adjacent-word edges (bidirected,
     * deduplicated) annotated with per-src out-degree, written BUCKETED
-    * BY src, 32 buckets — the [[ExtQueries]] staged-purchase-edges
+    * BY src — the [[ExtQueries]] staged-purchase-edges
     * pattern for the vocabulary-sized word graph, so the corpus-sized
     * tokenize + explode + distinct derivation is an ingest-time cost
     * and a rank round's src-join reads the bucket layout Exchange-free.
@@ -135,8 +129,7 @@ object LlmQueries {
     * |E| (count.txt). Returns (bucketedTableName, edgeCount). */
   private def stagedWordEdges(s: org.apache.spark.sql.SparkSession,
                               dir: String): (String, Long) = {
-    val sig = CoreQueries.corpusSig(dir, "documents.parquet")
-    val edgesDir = CoreQueries.stageVersioned("wordedges", sig, dir) { path =>
+    val edgesDir = Stage.versioned("wordedges2", dir, "documents") { path =>
       val e0 = Tables(s, dir).documents
         .select(explode(TextOps.ngramTokens(col("text"), 2)).as("bigram"))
         .select(substring_index(col("bigram"), " ", 1).as("src"),
@@ -152,42 +145,28 @@ object LlmQueries {
       // session default (a 31-node word graph under 32-partition
       // shuffles is 600+ near-empty tasks per query — measured 3.5 s of
       // pure scheduling at sf0.1, 2.3 s with matched parallelism)
-      val n = s.read.parquet(s"$path/edges.parquet").count()
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$path/count.txt"), n.toString)
+      Stage.writeCount(s, path, "edges.parquet")
     }
-    val nEdges = CoreQueries.stagedCount(s, edgesDir, "edges.parquet")
-    // ~2M edges per bucket, 1..32 — the stage-time twin of the
-    // consumer-side parallelism policy (graft.ext.Graph.rankParallelism)
-    val buckets = math.max(1L, math.min(32L, (nEdges + 1999999L) / 2000000L))
-      .toInt
-    val tbl = s"graft_wordedges_${CoreQueries.stageDigest("wordedgesbkt", dir)}"
-    // bucketed FILES once per corpus; per JVM only the catalog MOUNT
-    // ([[graft.io.Sinks.mountBucketed]] — no per-JVM rewrite)
-    val bktDir = CoreQueries.stageVersioned("wordedgesbktf", sig, dir) { path =>
+    val nEdges = Stage.count(edgesDir)
+    val tbl = Stage.bucketed(s, "wordedgesbkt", dir, "documents")(
+        "src", Stage.buckets(nEdges)) {
       val e = s.read.parquet(s"$edgesDir/edges.parquet")
-      val withDeg = e.join(
+      e.join(
         e.groupBy("src").agg(count(lit(1)).cast("double").as("outdeg")),
         Seq("src"))
-      val build = s"${tbl}_build"
-      s.sql(s"DROP TABLE IF EXISTS $build")
-      graft.io.Sinks.writeBucketed(withDeg, build, "src", buckets,
-        sortCol = Some("src"), path = Some(s"$path/files"))
-      s.sql(s"DROP TABLE IF EXISTS $build") // external: files remain
-      ()
-    }
-    CoreQueries.stageEachJvm(s"wordedgesmnt_$sig", dir) { _ =>
-      graft.io.Sinks.mountBucketed(s, tbl,
-        s.read.parquet(s"$bktDir/files").schema,
-        "src", buckets, Some("src"), s"$bktDir/files")
     }
     (tbl, nEdges)
   }
 
+  /** Stage the even-doc corpus's near-dup index (band + shingle tables,
+    * [[Dedup.corpusNearDupIndex]]) once per corpus — the ingest-time write
+    * of the production incremental-dedup path. The stage key is the
+    * documents table's signature ([[graft.io.Stage.sig]]: mtime + file
+    * count), so a regenerated corpus at the same path restages instead of
+    * serving a stale index. */
   private def stagedNearDupIndex(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String = {
-    val sig = CoreQueries.corpusSig(dir, "documents.parquet")
-    CoreQueries.stageVersioned("neardupidx", sig, dir) { path =>
+    Stage.versioned("neardupidx", dir, "documents") { path =>
       val (bands, sets) = Dedup.corpusNearDupIndex(
         Tables(s, dir).documents.where(col("doc_id") % 2 === 0),
         "doc_id", "text")
@@ -207,11 +186,10 @@ object LlmQueries {
   private def stagedIncrCorpus(s: org.apache.spark.sql.SparkSession,
                                dir: String): String = {
     // family carries a FORMAT version ("2" = +corpus_hashes.parquet):
-    // corpusSig tracks corpus identity only, so an artifact-format change
+    // Stage.sig tracks corpus identity only, so an artifact-format change
     // must bump the family or an already-staged version dir (old format,
     // same sig) would be served missing the new file
-    val sig = CoreQueries.corpusSig(dir, "documents.parquet")
-    CoreQueries.stageVersioned("incrcorpus2", sig, dir) { path =>
+    Stage.versioned("incrcorpus2", dir, "documents") { path =>
       val old = Tables(s, dir).documents.where(col("doc_id") % 10 =!= 9)
       val (bands, sets) = Dedup.corpusNearDupIndex(old, "doc_id", "text")
       graft.io.Sinks.parquet(bands, s"$path/corpus_bands.parquet")
@@ -236,8 +214,7 @@ object LlmQueries {
     * query-time cost tracks the queried postings, never the corpus text. */
   private def stagedInvertedIndex(s: org.apache.spark.sql.SparkSession,
                                   dir: String): String = {
-    val sig = CoreQueries.corpusSig(dir, "documents.parquet")
-    CoreQueries.stageVersioned("invidx", sig, dir) { path =>
+    Stage.versioned("invidx", dir, "documents") { path =>
       graft.io.Sinks.parquet(
         TextOps.invertedIndex(Tables(s, dir).documents),
         s"$path/postings.parquet")
@@ -249,8 +226,7 @@ object LlmQueries {
     * persisted encode path reads back. */
   private def stagedBpeMerges(s: org.apache.spark.sql.SparkSession,
                               dir: String): String = {
-    val sig = CoreQueries.corpusSig(dir, "documents.parquet")
-    CoreQueries.stageVersioned("bpemerges", sig, dir) { path =>
+    Stage.versioned("bpemerges", dir, "documents") { path =>
       graft.io.Sinks.parquet(
         graft.ext.Bpe.train(s, Tables(s, dir).documents, "text", merges = 20),
         s"$path/bpe_merges.parquet")
@@ -293,8 +269,7 @@ object LlmQueries {
     * file identity like every staged artifact. */
   private def stagedAnnIndex(s: org.apache.spark.sql.SparkSession,
                              dir: String): String = {
-    val sig = CoreQueries.corpusSig(dir, "embeddings.parquet")
-    CoreQueries.stageVersioned("annidx", sig, dir) { path =>
+    Stage.versioned("annidx", dir, "embeddings") { path =>
       val e = Tables(s, dir).embeddings
       val seedHash = Some(md5(concat(col("vec_id").cast("string"),
         lit(":42"))))

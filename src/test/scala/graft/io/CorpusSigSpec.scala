@@ -5,6 +5,7 @@ import java.nio.file.attribute.FileTime
 
 import graft.SparkSpec
 
+/** The corpus signature Bench and Verify print ([[Stage.corpus]]). */
 class CorpusSigSpec extends SparkSpec {
   import spark.implicits._
 
@@ -24,8 +25,19 @@ class CorpusSigSpec extends SparkSpec {
       FileTime.fromMillis(base + 500))
     val newest = java.time.Instant.ofEpochMilli(base + 500).toString
     assert(newest.endsWith(".500Z"), s"fixture rendering drifted: $newest")
-    val sig = CorpusSig.summary(spark, dir)
+    val sig = Stage.corpus(dir)
     assert(sig.endsWith(s"@$newest"),
       s"summary '$sig' must carry the numerically-latest mtime $newest")
+  }
+
+  test("corpus throws on an unreadable table instead of printing a placeholder") {
+    val dir = Files.createTempDirectory("graft_corpus_unreadable")
+    Files.createDirectories(dir.resolve("nation.parquet"))
+    Files.writeString(dir.resolve("nation.parquet").resolve("part0"), "n")
+    // a table entry whose target is gone: listed, but unreadable
+    val broken = dir.resolve("region.parquet")
+    Files.createSymbolicLink(broken, dir.resolve("gone"))
+    val e = intercept[java.io.IOException](Stage.corpus(dir.toString))
+    assert(e.getMessage.contains(broken.toString), e.getMessage)
   }
 }

@@ -1,11 +1,12 @@
-package graft.queries
+package graft.io
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
 
 import graft.SparkSpec
 
-/** The versioned staged-artifact contract ([[CoreQueries.stageVersioned]]):
-  * write-new-version-then-flip. Version dirs are immutable once committed,
+/** The staged-artifact contract ([[Stage]]): write-new-version-then-flip
+  * ([[Stage.publish]]). Version dirs are immutable once committed,
   * the MANIFEST flips atomically after commit, and GC never touches the
   * previous version or anything recent — so a reader interleaved with a
   * concurrent re-stage can never observe partial or mixed state. */
@@ -13,7 +14,7 @@ class StageSpec extends SparkSpec {
 
   private def famBase(family: String, dir: String) =
     Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stagefam_${family}_${CoreQueries.stageDigest(family, dir)}")
+      s"graft_stagefam_${family}_${Stage.digest(family, dir)}")
 
   private def listVersions(family: String, dir: String): Seq[String] =
     Option(famBase(family, dir).toFile.listFiles).toSeq.flatten
@@ -23,7 +24,7 @@ class StageSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stagespec").toString
     val family = "specrace"
     def stage(sig: String, tag: String, nFiles: Int): String =
-      CoreQueries.stageVersioned(family, sig, dir) { p =>
+      Stage.publish(family, sig, dir) { p =>
         Files.createDirectories(Paths.get(p))
         // multi-file artifact: a torn publish would show files from two
         // tags, or fewer than nFiles
@@ -63,7 +64,7 @@ class StageSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_stagespec_gc").toString
     val family = "specgc"
     def stage(sig: String): String =
-      CoreQueries.stageVersioned(family, sig, dir) { p =>
+      Stage.publish(family, sig, dir) { p =>
         Files.createDirectories(Paths.get(p))
         Files.writeString(Paths.get(s"$p/x.txt"), sig)
       }
@@ -90,7 +91,7 @@ class StageSpec extends SparkSpec {
     val ver = famBase(family, dir).resolve("v_s")
     Files.createDirectories(ver.resolve("data"))
     Files.writeString(ver.resolve("data").resolve("x.txt"), "PARTIAL")
-    val p = CoreQueries.stageVersioned(family, "s", dir) { p =>
+    val p = Stage.publish(family, "s", dir) { p =>
       Files.createDirectories(Paths.get(p))
       Files.writeString(Paths.get(s"$p/x.txt"), "REBUILT")
     }
@@ -101,8 +102,56 @@ class StageSpec extends SparkSpec {
   test("corpusSig of a missing table throws and names the path") {
     val dir = Files.createTempDirectory("graft_sigspec").toString
     val e = intercept[java.io.IOException](
-      CoreQueries.corpusSig(dir, "missing.parquet"))
+      Stage.sig(dir, "missing"))
     assert(e.getMessage.contains(Paths.get(dir, "missing.parquet").toString),
       e.getMessage)
+  }
+
+  test("a two-table versioned key restages when only the second table's mtime moves") {
+    val dir = Files.createTempDirectory("graft_stagespec_two").toString
+    Seq("a", "b").foreach { t =>
+      Files.createDirectories(Paths.get(dir, s"$t.parquet"))
+      Files.writeString(Paths.get(dir, s"$t.parquet", "part0"), t)
+    }
+    var builds = 0
+    def stage(): String = Stage.versioned("spectwo", dir, "a", "b") { p =>
+      builds += 1
+      Files.createDirectories(Paths.get(p))
+    }
+    val v1 = stage()
+    assert(stage() == v1 && builds == 1, "an unchanged corpus restaged")
+    val b = Paths.get(dir, "b.parquet")
+    Files.setLastModifiedTime(b,
+      FileTime.fromMillis(Files.getLastModifiedTime(b).toMillis + 1000))
+    val v2 = stage()
+    assert(builds == 2 && v2 != v1,
+      "regenerating the second source table served the stale artifact")
+  }
+
+  test("bucketed called twice in one JVM creates once, mounts once, and scans bucketed") {
+    import org.apache.spark.sql.functions.{col, sum}
+    val dir = Files.createTempDirectory("graft_stagespec_bkt").toString
+    spark.range(10).write.parquet(s"$dir/t.parquet")
+    var builds = 0
+    def stage(): String = Stage.bucketed(spark, "specbkt", dir, "t")("k", 4) {
+      builds += 1
+      spark.range(300).select((col("id") % 40).as("k"), col("id").as("v"))
+    }
+    val tbl = stage()
+    try {
+      val mounted = spark.table(tbl)
+      assert(mounted.count() == 300)
+      val plan = mounted.groupBy("k").agg(sum("v"))
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("Bucketed: true"),
+        s"mounted layout not read as bucketed:\n$plan")
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"mounted bucketed agg still shuffles:\n$plan")
+      // with the mount dropped, a second mount would be visible
+      spark.sql(s"DROP TABLE $tbl")
+      assert(stage() == tbl)
+      assert(builds == 1, s"create ran $builds times")
+      assert(!spark.catalog.tableExists(tbl), "the second call mounted again")
+    } finally spark.sql(s"DROP TABLE IF EXISTS $tbl")
   }
 }

@@ -52,7 +52,7 @@ run_family() {  # run_family <label> <csv> [mem]
 
 echo "sf10 campaign start $(date -u); corpus=$SF"
 df -h /tmp | tail -1
-# Pre-stage pass: touch every stageVersioned family once so the published
+# Pre-stage pass: touch every Stage.versioned family once so the published
 # per-query numbers are uniformly WARM-artifact (comparable to the r12/r13
 # family tables, where staging one-time cost is reported separately in
 # SCALE.md). Its numbers are NOT merged into the artifact.
