@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, GraftColumn}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{MinHashBands, MinHashSigs, SimHashTokens}
+import graft.ops.Blocking
 
 import TextOps.{jaccard, shingles}
 
@@ -61,13 +62,13 @@ object Dedup {
   /** The corpus side of the cross-frame candidate join: band rows, with
     * over-cap buckets reduced to their minimum-id representative (see
     * [[incrementalNearDedup]]). Lazy — exposed for plan-contract tests. */
-  private[graft] def corpusBandSide(cBands: DataFrame, maxBucket: Int): DataFrame = {
-    val cStats = cBands.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("__bsz"), min(col("id")).as("__rep"))
-    cBands.join(cStats, Seq("band", "band_hash"))
-      .where(col("__bsz") <= maxBucket || col("id") === col("__rep"))
+  private[graft] def corpusBandSide(cBands: DataFrame, maxBucket: Int): DataFrame =
+    Blocking.sized(cBands, bandKey, "id", Nil)
+      .where(!Blocking.spoke("id", maxBucket))
       .select(col("band"), col("band_hash"), col("id").as("c_id"))
-  }
+
+  /** The block key of a MinHash band table. */
+  private val bandKey = Seq("band", "band_hash")
 
   /** Cross-frame LSH candidates: equality join on (band, band_hash) —
     * the shape that keeps batch-vs-corpus candidacy bucket-bounded. Lazy. */
@@ -162,18 +163,8 @@ object Dedup {
       corpusBands: DataFrame, corpusShingles: DataFrame, batch: DataFrame,
       bSets: DataFrame, bBands: DataFrame, idCol: String,
       threshold: Double, maxBucket: Int): DataFrame = {
-    val crossCands =
-      crossBandCandidates(bBands, corpusBandSide(corpusBands, maxBucket))
-        .ckpt()
-    // semi-filter the corpus shingle table to candidate ids first (the id
-    // list broadcasts) — the array-heavy store is scanned, never shuffled
-    val cTouched = corpusShingles
-      .join(broadcast(crossCands.select(col("c_id").as("id")).distinct()),
-        Seq("id"), "left_semi")
-    val hitCorpus = crossCands
-      .join(bSets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
-      .join(cTouched.select(col("id").as("c_id"), col("sh").as("c_sh")), Seq("c_id"))
-      .where(jaccard(col("b_sh"), col("c_sh")) >= threshold)
+    val hitCorpus = crossPairs(corpusBands, corpusShingles, bSets, bBands,
+        threshold, maxBucket)
       .select(col("b_id").as(idCol)).distinct().ckpt()
     val withinPairs = nearDupPairsFromBands(bSets, bBands, threshold,
       maxBucket)
@@ -203,27 +194,36 @@ object Dedup {
         shingles(col(textCol), shingleK).as("sh"))
       .persist()
     val bBands = minhashBandsFromSets(bSets, numHashes, bands).persist()
+    val cross = crossPairs(corpusBands, corpusShingles, bSets, bBands,
+      threshold, maxBucket)
+    val within = nearDupPairsFromBands(bSets, bBands, threshold, maxBucket)
+    bBands.unpersist()
+    val out = cross.unionAll(within).ckpt()
+    bSets.unpersist()
+    out
+  }
+
+  /** Verified batch-vs-corpus pairs, lazy `(a_id, b_id, jaccard)`: a_id
+    * from the corpus index, b_id from the caller-persisted batch set/band
+    * tables. The cross candidates checkpoint eagerly; then the corpus
+    * shingle table is semi-filtered to candidate ids FIRST (the id list
+    * broadcasts), so the array-heavy store is scanned map-side, never
+    * shuffled — only touched rows enter the exact-Jaccard join. */
+  private def crossPairs(corpusBands: DataFrame, corpusShingles: DataFrame,
+                         bSets: DataFrame, bBands: DataFrame,
+                         threshold: Double, maxBucket: Int): DataFrame = {
     val crossCands =
       crossBandCandidates(bBands, corpusBandSide(corpusBands, maxBucket))
         .ckpt()
-    bBands.unpersist()
-    // semi-filter the corpus shingle table to candidate ids FIRST (the id
-    // list broadcasts): the array-heavy store is scanned map-side, never
-    // shuffled — only touched rows enter the verify join
     val cTouched = corpusShingles
       .join(broadcast(crossCands.select(col("c_id").as("id")).distinct()),
         Seq("id"), "left_semi")
-    val cross = crossCands
+    crossCands
       .join(bSets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
       .join(cTouched.select(col("id").as("c_id"), col("sh").as("c_sh")), Seq("c_id"))
       .withColumn("jaccard", jaccard(col("b_sh"), col("c_sh")))
       .where(col("jaccard") >= threshold)
       .select(col("c_id").as("a_id"), col("b_id"), col("jaccard"))
-    val within = nearDupPairsFromSets(bSets, threshold, numHashes, bands,
-      maxBucket)
-    val out = cross.unionAll(within).ckpt()
-    bSets.unpersist()
-    out
   }
 
   /** MinHash signature table: (id, h0..h{numHashes-1}) — slot i is the
@@ -308,17 +308,11 @@ object Dedup {
   }
 
   /** Candidate pairs from LSH buckets: equality self-join on (band,
-    * band_hash), ordered ids, distinct. Never all-pairs.
-    *
-    * Over-full buckets are the quadratic hole of every LSH join: ONE
-    * boilerplate band shared by 10 M docs at 100 TB would emit ~10¹³ pairs
-    * from that bucket alone. Buckets above `maxBucket` therefore collapse
-    * to a STAR around the bucket's minimum id — k-1 pairs instead of
-    * k(k-1)/2 — rather than being dropped: every member stays connected
-    * (an over-full bucket means the docs are near-identical anyway, so the
-    * downstream transitive closure still groups them), nothing is silently
-    * truncated, and downstream exact verification still sees each pair.
-    * The trade is recall WITHIN an over-cap bucket for members whose only
+    * band_hash), ordered ids, distinct. Never all-pairs: buckets above
+    * `maxBucket` collapse to a STAR around the bucket's minimum id, k-1
+    * pairs instead of k(k-1)/2 ([[graft.ops.Blocking]]). Every member stays
+    * connected and downstream exact verification still sees each pair;
+    * the trade is recall WITHIN an over-cap bucket for members whose only
     * qualifying partner is a non-representative — acceptable exactly
     * because such buckets are boilerplate clusters. */
   def nearDupCandidates(df: DataFrame, idCol: String, textCol: String,
@@ -352,35 +346,17 @@ object Dedup {
     * (round 15: [[ingestBatch]]'s three band uses collapse to one).
     * Restricting a band table by id IS re-banding the restricted set —
     * band rows are per-doc deterministic — so callers may semi-join the
-    * shared table instead of recomputing it, with bit-identical output.
-    *
-    * Bucket size + representative via AGGREGATE + JOIN-BACK, not a window
-    * over (band, band_hash): a degenerate mega-bucket (billions of empty/
-    * boilerplate docs sharing a band value — exactly what corpus dedup at
-    * 100 TB sees) would buffer whole inside ONE WindowExec task with no
-    * AQE remedy, while the aggregate combines map-side and the join-back
-    * is AQE-skew-splittable. */
+    * shared table instead of recomputing it, with bit-identical output. */
   private[graft] def nearDupCandidatesFromBands(bands0: DataFrame,
                                                 maxBucket: Int): DataFrame = {
-    val stats = bands0.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("__bsz"), min(col("id")).as("__rep"))
-    // the joined frame is persisted: the FIRST consumer materializes
+    // the sized frame is persisted: the FIRST consumer materializes
     // it as a side effect of its own pass (no standalone count — measured
     // +30% on the heavy dedup queries), the other two read the cache.
     // Once b is materialized bands0 is never read again, so under memory
     // pressure its blocks are evictable for free — the 2x-cache window is
     // soft, not a hard peak.
-    val b = bands0.join(stats, Seq("band", "band_hash")).persist()
-    val small = b.where(col("__bsz") <= maxBucket)
-    val x = small.select(col("band"), col("band_hash"), col("id").as("a_id"))
-    val y = small.select(col("band"), col("band_hash"), col("id").as("b_id"))
-    val smallPairs = x.join(y, Seq("band", "band_hash"))
-      .where(col("a_id") < col("b_id"))
-      .select("a_id", "b_id")
-    val starPairs = b
-      .where(col("__bsz") > maxBucket && col("id") =!= col("__rep"))
-      .select(col("__rep").as("a_id"), col("id").as("b_id"))
-    val cands = smallPairs.union(starPairs)
+    val b = Blocking.sized(bands0, bandKey, "id", Nil).persist()
+    val cands = Blocking.pairs(b, bandKey, "id", Nil, maxBucket)
       .distinct()
       .ckpt()
     b.unpersist()
@@ -391,8 +367,15 @@ object Dedup {
     * the shared-pass verify path (see [[nearDupCandidatesFromBands]]). */
   private[graft] def nearDupPairsFromBands(sets: DataFrame, bands0: DataFrame,
                                            threshold: Double,
-                                           maxBucket: Int = 10000): DataFrame = {
-    val cands = nearDupCandidatesFromBands(bands0, maxBucket)
+                                           maxBucket: Int = 10000): DataFrame =
+    verifiedWithin(nearDupCandidatesFromBands(bands0, maxBucket), sets,
+      threshold)
+
+  /** Candidate pairs `(a_id, b_id)` whose exact shingle Jaccard over the
+    * `(id, sh)` frame `sets` is ≥ `threshold`, as `(a_id, b_id, jaccard)`;
+    * eager (localCheckpointed). */
+  private def verifiedWithin(cands: DataFrame, sets: DataFrame,
+                             threshold: Double): DataFrame =
     cands
       .join(sets.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id"))
       .join(sets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
@@ -400,7 +383,6 @@ object Dedup {
       .where(col("jaccard") >= threshold)
       .select("a_id", "b_id", "jaccard")
       .ckpt()
-  }
 
   /** Near-duplicate pairs: LSH candidates verified with EXACT shingle
     * Jaccard ≥ threshold. With 64 hashes / 16 bands, a true pair at J=0.7
@@ -433,16 +415,9 @@ object Dedup {
     * `sets` as soon as every arm has been built. */
   def nearDupPairsFromSets(sets: DataFrame, threshold: Double = 0.7,
                            numHashes: Int = 64, bands: Int = 16,
-                           maxBucket: Int = 10000): DataFrame = {
-    val cands = nearDupCandidatesFromSets(sets, numHashes, bands, maxBucket)
-    cands
-      .join(sets.select(col("id").as("a_id"), col("sh").as("a_sh")), Seq("a_id"))
-      .join(sets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
-      .withColumn("jaccard", jaccard(col("a_sh"), col("b_sh")))
-      .where(col("jaccard") >= threshold)
-      .select("a_id", "b_id", "jaccard")
-      .ckpt()
-  }
+                           maxBucket: Int = 10000): DataFrame =
+    verifiedWithin(nearDupCandidatesFromSets(sets, numHashes, bands,
+      maxBucket), sets, threshold)
 
   /** Character-n-gram Jaccard near-dup pairs within a blocking key: exact
     * set Jaccard over char k-grams, pairs restricted to equal `blockCol`
@@ -949,22 +924,12 @@ object Dedup {
     val bSets = batch.select(col(idCol).as("id"),
       shingles(col(textCol), 3).as("sh")).persist()
     val bBands = minhashBandsFromSets(bSets).persist()
-    val crossCands =
-      crossBandCandidates(bBands, corpusBandSide(corpusBands, 10000)).ckpt()
-    val cTouched = corpusShingles
-      .join(broadcast(crossCands.select(col("c_id").as("id")).distinct()),
-        Seq("id"), "left_semi")
     // verified cross pairs for the FULL batch — candidacy and the exact
     // verify are per-pair independent (the corpus-side bucket cap does
     // not depend on the batch), so the exact-survivor subset in step 2
     // is a pure filter of this one frame
-    val cross = crossCands
-      .join(bSets.select(col("id").as("b_id"), col("sh").as("b_sh")), Seq("b_id"))
-      .join(cTouched.select(col("id").as("c_id"), col("sh").as("c_sh")), Seq("c_id"))
-      .withColumn("jaccard", jaccard(col("b_sh"), col("c_sh")))
-      .where(col("jaccard") >= threshold)
-      .select(col("c_id").as("a_id"), col("b_id"), col("jaccard"))
-      .ckpt()
+    val cross = crossPairs(corpusBands, corpusShingles, bSets, bBands,
+      threshold, 10000).ckpt()
     // (2) near status for the exact survivors: corpus hits filtered from
     // the full-batch pass; within-batch keep-first pairs over the
     // survivor-restricted set/band tables
@@ -1027,7 +992,7 @@ object Dedup {
     * released once the (small) verified pair set is materialized.
     *
     * Buckets above `maxBucket` collapse to a star around the bucket-minimum
-    * id (same quadratic-hole guard as [[nearDupCandidates]]): connectivity
+    * id (the quadratic-hole guard of [[graft.ops.Blocking]]): connectivity
     * survives, pair count is k-1 not k²/2, and the Hamming verification
     * still gates each emitted pair. Recall trade: a member of an over-cap
     * bucket is only tested against the representative. */
@@ -1053,33 +1018,16 @@ object Dedup {
         s"transform(sequence(0, ${bands - 1}), j -> shiftright(sim, j * $chunk) & ${mask}L)"))
         .as(Seq("band", "chunk_val")))
       .persist()
-    // bucket size + representative (id AND its signature, via one
-    // min-struct) by aggregate + join-back, not a window over the bucket
-    // key — same mega-bucket skew armor as [[nearDupCandidates]]: the
-    // degenerate bucket (every near-blank doc shares a simhash chunk)
-    // must never serialize through one WindowExec task
-    val stats = banded0.groupBy("band", "chunk_val")
-      .agg(count(lit(1)).as("__bsz"),
-        min(struct(col("id"), col("sim"))).as("__r"))
-    // persisted for the same three-consumer reason as
-    // [[nearDupCandidates]] (first consumer materializes — no standalone
-    // count; banded0 is evictable for free once banded2 is cached)
-    val banded2 = banded0.join(stats, Seq("band", "chunk_val"))
-      .withColumn("__rep", col("__r.id"))
-      .withColumn("__repsim", col("__r.sim"))
-      .persist()
-    val small = banded2.where(col("__bsz") <= maxBucket)
-    val x = small.select(col("band"), col("chunk_val"), col("id").as("a_id"), col("sim").as("a_sim"))
-    val y = small.select(col("band"), col("chunk_val"), col("id").as("b_id"), col("sim").as("b_sim"))
-    val smallPairs = x.join(y, Seq("band", "chunk_val"))
-      .where(col("a_id") < col("b_id"))
+    // the representative carries its signature, so a star pair's hamming
+    // needs no second lookup; persisted for the same three-consumer
+    // reason as [[nearDupCandidatesFromBands]] (first consumer
+    // materializes — no standalone count; banded0 is evictable for free
+    // once banded2 is cached)
+    val key = Seq("band", "chunk_val")
+    val banded2 = Blocking.sized(banded0, key, "id", Seq("sim")).persist()
+    val pairs = Blocking.pairs(banded2, key, "id", Seq("sim"), maxBucket)
       .select(col("a_id"), col("b_id"),
-        bit_count(col("a_sim").bitwiseXOR(col("b_sim"))).as("hamming"))
-    val starPairs = banded2
-      .where(col("__bsz") > maxBucket && col("id") =!= col("__rep"))
-      .select(col("__rep").as("a_id"), col("id").as("b_id"),
-        bit_count(col("__repsim").bitwiseXOR(col("sim"))).as("hamming"))
-    val pairs = smallPairs.union(starPairs)
+        bit_count(col("__a_sim").bitwiseXOR(col("__b_sim"))).as("hamming"))
       .where(col("hamming") <= maxDist)
       .distinct()
       .ckpt()

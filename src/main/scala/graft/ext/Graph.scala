@@ -35,16 +35,7 @@ object Graph {
     * has already been scheduled wide. Callers run the rank loop in a
     * child session carrying this value. */
   def rankParallelism(edgeCount: Long, cap: Int = 32): Int = {
-    // per-partition edge budget, conf-overridable (round 14): the right
-    // value is a per-deployment trade between scheduling overhead (too
-    // many near-empty tasks) and core utilization (too few tasks on a
-    // wide executor) — parameterized instead of hard-coded, local
-    // default kept at the r13-measured 250k
-    val per = org.apache.spark.sql.SparkSession.getActiveSession
-      .flatMap(_.conf.getOption("graft.graph.edgesPerPartition"))
-      .flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0L)
-      .getOrElse(250000L)
+    val per = 250000L
     math.max(1L, math.min(cap.toLong, (edgeCount + per - 1L) / per)).toInt
   }
 

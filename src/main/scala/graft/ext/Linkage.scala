@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.Blocking
+
 /** Probabilistic record linkage (Fellegi & Sunter, "A theory for record
   * linkage", JASA 1969) — the classical entity-resolution scorer the
   * dedup family's similarity joins feed into when records carry FIELDS
@@ -24,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Scale: candidate pairs come from an EQUALITY self-join on `blockKey`
   * (never all-pairs), and block sizes bound the quadratic ONLY while the
   * cap holds — so blocks above `maxBlock` collapse to a star around the
-  * block's min-id representative (the [[Dedup.signaturePairs]] armor):
+  * block's min-id representative ([[graft.ops.Blocking]]):
   * pair count for an over-cap block is k−1 instead of k²/2, so one
   * skewed key (a dominant brand, an empty field in the block key) can
   * no longer turn the job into a runaway quadratic stage. Recall trade,
@@ -42,81 +44,50 @@ object Linkage {
     def disagreeWeight: Double = math.log((1.0 - m) / (1.0 - u))
   }
 
+  /** The block-annotated O(N) frame both halves of the operator read:
+    * every row with its block key `__blk`, id `__id` and compared fields,
+    * plus the block's size and min-id representative (id AND compared
+    * fields) from [[graft.ops.Blocking.sized]]. */
+  private def sizedFrame(df: DataFrame, idCol: String, blockKey: Column,
+                         fieldNames: Seq[String]): DataFrame = {
+    require(fieldNames.nonEmpty, "at least one compared field")
+    val base = df.select(blockKey.as("__blk") +: col(idCol).as("__id") +:
+      fieldNames.map(col): _*)
+    Blocking.sized(base, Seq("__blk"), "__id", fieldNames)
+  }
+
+  /** Blocked candidate pairs of a [[sizedFrame]], carrying both sides'
+    * compared fields (`__a_<f>` / `__b_<f>`): exact all-pairs within
+    * blocks at or under `maxBlock`, star-collapsed around the block's
+    * min-id representative above it. Shared by [[selfLinkPairs]] and
+    * [[selfLinkPairsEmFitted]] (scoring). The OUTPUT is O(Σ block²):
+    * stream it (aggregate/filter), never checkpoint it. */
+  private def candidatePairs(sized: DataFrame, fieldNames: Seq[String],
+                             maxBlock: Int): DataFrame = {
+    require(maxBlock >= 2, s"maxBlock must be >= 2, got $maxBlock")
+    Blocking.pairs(sized, Seq("__blk"), "__id", fieldNames, maxBlock)
+  }
+
+  /** Per-field agreement flag: non-null equality (nulls never agree). */
+  private def agreeFlag(f: String): Column =
+    (col(s"__a_$f") === col(s"__b_$f")).and(col(s"__a_$f").isNotNull)
+
   /** Blocked Fellegi–Sunter pair scoring over one frame (self-linkage):
     * candidate pairs share `blockKey` (a_id < b_id), each `fields` entry
     * adds its agreement/disagreement literal, and pairs scoring below
     * `threshold` drop. Returns (a_id, b_id, n_agree, score). Nulls never
     * agree (null ⇔ anything, including null, is a disagreement — the
     * conservative contract; use a sentinel upstream to opt out). */
-  /** Blocked candidate pairs carrying both sides' compared fields
-    * (`__a_<f>` / `__b_<f>`): exact all-pairs within blocks at or under
-    * `maxBlock`, star-collapsed around the block's min-id representative
-    * above it. Shared by [[selfLinkPairs]] (scoring) and
-    * [[agreementPatternCounts]] (the EM fit). */
-  /** The block-annotated O(N) frame both halves of the operator read:
-    * every row with its block key, size, and the block's min-id
-    * representative (id AND compared fields via one min-struct) by
-    * aggregate + join-back, never a window over the block key — the
-    * degenerate block must not serialize through one WindowExec task
-    * (same skew armor as [[Dedup.signaturePairs]]). */
-  private def sizedFrame(df: DataFrame, idCol: String, blockKey: Column,
-                         fieldNames: Seq[String]): DataFrame = {
-    require(fieldNames.nonEmpty, "at least one compared field")
-    val cols = col(idCol).as("__id") +: fieldNames.map(col)
-    val base = df.select((blockKey.as("__blk") +: cols): _*)
-    val stats = base.groupBy("__blk")
-      .agg(count(lit(1)).as("__bsz"),
-        min(struct(col("__id") +: fieldNames.map(col): _*)).as("__r"))
-    base.join(stats, Seq("__blk"))
-  }
-
-  /** Candidate pairs from a prebuilt [[sizedFrame]] — exact all-pairs at
-    * or under the cap, member-vs-representative star above it. The
-    * OUTPUT is O(Σ block²): stream it (aggregate/filter), never
-    * checkpoint it. */
-  private def pairsFromSized(sized: DataFrame, fieldNames: Seq[String],
-                             maxBlock: Int): DataFrame = {
-    require(maxBlock >= 2, s"maxBlock must be >= 2, got $maxBlock")
-    // exact path: all pairs within blocks at or under the cap
-    val small = sized.where(col("__bsz") <= maxBlock)
-    val a = small.select(col("__blk") +: col("__id").as("a_id") +:
-      fieldNames.map(f => col(f).as(s"__a_$f")): _*)
-    val b = small.select(col("__blk") +: col("__id").as("b_id") +:
-      fieldNames.map(f => col(f).as(s"__b_$f")): _*)
-    val exact = a.join(b, Seq("__blk"))
-      .where(col("a_id") < col("b_id"))
-      .select(col("a_id") +: col("b_id") +:
-        fieldNames.flatMap(f => Seq(col(s"__a_$f"), col(s"__b_$f"))): _*)
-    // star path: over-cap blocks compare members against the block's
-    // min-id representative only — k-1 pairs, not k²/2; a_id < b_id
-    // holds by construction (the representative is the block minimum)
-    val star = sized
-      .where(col("__bsz") > maxBlock && col("__id") =!= col("__r.__id"))
-      .select(col("__r.__id").as("a_id") +: col("__id").as("b_id") +:
-        fieldNames.flatMap(f => Seq(
-          col(s"__r.$f").as(s"__a_$f"), col(f).as(s"__b_$f"))): _*)
-    exact.union(star)
-  }
-
-  private def candidatePairs(df: DataFrame, idCol: String, blockKey: Column,
-                             fieldNames: Seq[String],
-                             maxBlock: Int): DataFrame =
-    // a plain pruned projection — no row inflation to cache, so the
-    // operator stays a single LAZY declarative plan (scan reuse, runtime
-    // broadcast of the block stats, and skew handling are AQE's call)
-    pairsFromSized(sizedFrame(df, idCol, blockKey, fieldNames), fieldNames,
-      maxBlock)
-
-  /** Per-field agreement flag: non-null equality (nulls never agree). */
-  private def agreeFlag(f: String): Column =
-    (col(s"__a_$f") === col(s"__b_$f")).and(col(s"__a_$f").isNotNull)
-
   def selfLinkPairs(df: DataFrame, idCol: String, blockKey: Column,
                     fields: Seq[FieldSpec],
                     threshold: Double,
                     maxBlock: Int = 10000): DataFrame = {
-    val pairs = candidatePairs(df, idCol, blockKey, fields.map(_.field),
-      maxBlock)
+    // a plain pruned projection — no row inflation to cache, so the
+    // operator stays a single LAZY declarative plan (scan reuse, runtime
+    // broadcast of the block stats, and skew handling are AQE's call)
+    val fieldNames = fields.map(_.field)
+    val pairs = candidatePairs(sizedFrame(df, idCol, blockKey, fieldNames),
+      fieldNames, maxBlock)
     val agreeFlags = fields.map(f => agreeFlag(f.field))
     val nAgree = agreeFlags.map(fl => when(fl, 1L).otherwise(0L))
       .reduce(_ + _)
@@ -167,7 +138,7 @@ object Linkage {
     val (_, m, u) = emFit(pats, k, iters)
     val specs = fieldNames.zipWithIndex.map { case (f, i) =>
       FieldSpec(f, m(i), u(i)) }
-    val pairs = pairsFromSized(sized, fieldNames, maxBlock)
+    val pairs = candidatePairs(sized, fieldNames, maxBlock)
     val agreeFlags = specs.map(f => agreeFlag(f.field))
     val nAgree = agreeFlags.map(fl => when(fl, 1L).otherwise(0L))
       .reduce(_ + _)
@@ -212,7 +183,7 @@ object Linkage {
     val k = fieldNames.length
     require(k <= 16, s"subset-lattice counting is 2^k in k; got k=$k")
     val spark = sized.sparkSession
-    val small = sized.where(col("__bsz") <= maxBlock)
+    val small = sized.where(Blocking.inCap(maxBlock))
     // m(T) for EVERY subset T in ONE pass: GROUPING SETS over
     // (__blk, fields) — the Expand operator replicates each row 2^k
     // times into one partial-aggregated job instead of 2^k separate
@@ -262,11 +233,11 @@ object Linkage {
     }.toMap
     // star pass: over-cap members vs the block representative — linear
     val starFlags = fieldNames.zipWithIndex.map { case (f, i) =>
-      when((col(s"__r.$f") === col(f)).and(col(s"__r.$f").isNotNull), 1)
+      when((Blocking.rep(f) === col(f)).and(Blocking.rep(f).isNotNull), 1)
         .otherwise(0).as(s"g$i")
     }
     val starCounts = sized
-      .where(col("__bsz") > maxBlock && col("__id") =!= col("__r.__id"))
+      .where(Blocking.spoke("__id", maxBlock))
       .select(starFlags: _*)
       .groupBy(fieldNames.indices.map(i => col(s"g$i")): _*)
       .agg(count(lit(1)).as("n"))

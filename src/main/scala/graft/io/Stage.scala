@@ -188,11 +188,14 @@ private[graft] object Stage {
   def count(path: String): Long =
     Files.readString(Paths.get(path, "count.txt")).trim.toLong
 
-  /** Stable scratch dir of a (kind, corpus dir) pair, for sinks that
-    * overwrite their output on every run: a fresh temp dir per run would
-    * accrete copies in the temp dir until writes start failing. */
+  /** Stable scratch dir of a (kind, corpus dir) pair, emptied, for a
+    * query that writes intermediate output on every run: a fresh temp dir
+    * per run would accrete copies in the temp dir until writes start
+    * failing, and a surviving streaming checkpoint would make a rerun
+    * process nothing. */
   def scratch(kind: String, dir: String): String = {
     val p = tmpDir.resolve(s"graft_scratch_${kind}_${digest(kind, dir)}")
+    rmTree(p.toFile)
     Files.createDirectories(p)
     p.toString
   }

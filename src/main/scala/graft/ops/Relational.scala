@@ -205,7 +205,7 @@ object Relational {
     * small unless the corpus truly clusters — and when it DOES (measured:
     * clustered sequential names, 12× sf0.1→sf1 before the cap), blocks
     * above `maxBlock` collapse to a STAR around the block-minimum id, the
-    * same quadratic-hole guard as [[graft.ext.Dedup.signaturePairs]]:
+    * quadratic-hole guard of [[Blocking]]:
     * in-block pair count drops k²/2 → k-1, connectivity of a true
     * duplicate cluster survives (every member still pairs with the
     * representative), and the exact levenshtein still gates each emitted
@@ -214,43 +214,28 @@ object Relational {
     * completeness guarantee is the operator's contract, and capping is an
     * explicit opt-in a caller makes knowingly (the registered `fuzzy_join`
     * passes 50, and its oracle replays the same star-collapse so engine
-    * and oracle agree wherever the cap binds). Block sizes come from an
-    * aggregate + join-back, never a window over the block key — the
-    * degenerate block must not serialize through one task.
+    * and oracle agree wherever the cap binds).
     *
     * Distance budgets >1 need recursive deletes (SymSpell proper); at
     * corpus scale d=1 is the useful regime — beyond it, switch to n-gram
     * Jaccard ([[graft.ext.Dedup.ngramJaccardPairs]]). */
   def fuzzySelfPairs(df: DataFrame, idCol: String, strCol: String,
                      maxBlock: Int = Int.MaxValue): DataFrame = {
-    val v = df.select(col(idCol).as("__fid"), col(strCol).as("__fs"))
-      .withColumn("__i", explode(sequence(lit(0), length(col("__fs")))))
-      .select(col("__fid"), col("__fs"),
-        when(col("__i") === 0, col("__fs"))
+    val v = df.select(col(idCol).as("id"), col(strCol).as("s"))
+      .withColumn("__i", explode(sequence(lit(0), length(col("s")))))
+      .select(col("id"), col("s"),
+        when(col("__i") === 0, col("s"))
           .otherwise(concat(
-            expr("substring(__fs, 1, __i - 1)"),
-            expr("substring(__fs, __i + 1, length(__fs))"))).as("__v"))
+            expr("substring(s, 1, __i - 1)"),
+            expr("substring(s, __i + 1, length(s))"))).as("__v"))
       // consumed twice (stats + probe); materialize the explode once
       .ckpt()
-    val stats = v.groupBy("__v")
-      .agg(count(lit(1)).as("__bsz"),
-        min(struct(col("__fid"), col("__fs"))).as("__r"))
-    val vs = v.join(stats, Seq("__v"))
-    val inCap = {
-      val a = vs.where(col("__bsz") <= maxBlock)
-        .select(col("__fid").as("a_id"), col("__fs").as("a_s"), col("__v"))
-      val b = vs.where(col("__bsz") <= maxBlock)
-        .select(col("__fid").as("b_id"), col("__fs").as("b_s"), col("__v"))
-      a.join(b, Seq("__v")).where(col("a_id") < col("b_id"))
-        .select("a_id", "a_s", "b_id", "b_s")
-    }
-    // over-cap: representative (block-min id, so always the a-side) vs
-    // each other member — linear in block size
-    val starred = vs.where(col("__bsz") > maxBlock &&
-        col("__fid") =!= col("__r.__fid"))
-      .select(col("__r.__fid").as("a_id"), col("__r.__fs").as("a_s"),
-        col("__fid").as("b_id"), col("__fs").as("b_s"))
-    inCap.unionByName(starred).distinct()
+    val key = Seq("__v")
+    Blocking.pairs(Blocking.sized(v, key, "id", Seq("s")), key, "id",
+        Seq("s"), maxBlock)
+      .select(col("a_id"), col("__a_s").as("a_s"),
+        col("b_id"), col("__b_s").as("b_s"))
+      .distinct()
       // thresholded levenshtein: banded DP, O(threshold·n) per pair vs the
       // full O(n²) table, returning -1 beyond the bound — the verify step
       // runs once per candidate, so the band is the whole cost there

@@ -3106,8 +3106,7 @@ object ExtQueries {
         |UNION ALL SELECT 'puredges', COUNT(*), CAST(SUM(src) AS BIGINT),
         |  CAST(SUM(outdeg) AS BIGINT) FROM pd""".stripMargin))(
       (s, dir) => {
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_ingest_layouts").toString
+        val tmp = Stage.scratch("ingestlayouts", dir)
         val t = Tables(s, dir)
         def bkt(df: org.apache.spark.sql.DataFrame, table: String,
                 bucketCol: String, buckets: Int, path: String): Unit = {
@@ -4083,20 +4082,11 @@ object ExtQueries {
   private[queries] def rankSession(s: org.apache.spark.sql.SparkSession,
                                    nEdges: Long): org.apache.spark.sql.SparkSession = {
     val parts = graft.ext.Graph.rankParallelism(nEdges)
-    // graft.graph.adaptiveRounds (default true) exposes AQE inside the
-    // loop's child session as a knob: one round-14 measurement window
-    // showed AQE-off winning the rank rounds (hits 7.4 → 5.0 s) and a
-    // later window showed the opposite ordering — the box's documented
-    // ambient band (±20-30%, SCALE.md) swamps a per-config delta of that
-    // size, so the DEFAULT stays Spark's (AQE on, the r13-adjudicated
-    // posture) and the knob records the experiment for a quieter box.
-    val aqe = !s.conf.getOption("graft.graph.adaptiveRounds")
-      .exists(_.trim.equalsIgnoreCase("false"))
-    if (parts.toString == s.conf.get("spark.sql.shuffle.partitions") && aqe) s
+    if (parts.toString == s.conf.get("spark.sql.shuffle.partitions")) s
     else {
       val c = s.newSession()
       c.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      c.conf.set("spark.sql.adaptive.enabled", aqe.toString)
+      c.conf.set("spark.sql.adaptive.enabled", "true")
       c
     }
   }

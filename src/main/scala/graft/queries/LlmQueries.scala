@@ -657,8 +657,7 @@ object LlmQueries {
           s.read.parquet(s"$idx/corpus_hashes.parquet"),
           s.read.parquet(s"$idx/base_components.parquet"),
           "doc_id", "text",
-          outDir = java.nio.file.Files
-            .createTempDirectory("graft_ingest_batch").toString,
+          outDir = Stage.scratch("ingestbatch", dir),
           threshold = 0.7, hash = TextOps.md5Hash60)
       }),
 
@@ -3116,8 +3115,7 @@ object LlmQueries {
     Reg("stream_near_dedup", Some(incrNearPersistedSql))(
       (s, dir) => {
         val idx = stagedNearDupIndex(s, dir)
-        val base = java.nio.file.Files
-          .createTempDirectory("graft_stream_neardup").toString
+        val base = Stage.scratch("streamneardup", dir)
         graft.ext.Streaming.nearDedupStream(
           graft.ext.Streaming.readDocuments(s, dir)
             .where(col("doc_id") % 2 === 1),

@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * as binary, so every later diff of it shows up as `Bin` and escapes
   * review. Write such characters as escapes (`\u0001`), never raw.
   * Staging (temp-dir paths, corpus signatures) lives in `graft.io.Stage`
-  * alone, so query files name neither the temp dir nor file mtimes. */
+  * alone, so query files name neither the temp dir nor file mtimes, and
+  * the blocked-pair policy lives in `graft.ops.Blocking` alone, so no
+  * other file names its block-size column. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def scalaFiles(root: Path): Seq[Path] = {
@@ -36,8 +38,21 @@ class SourceHygieneSpec extends AnyFunSuite {
     val bad = for {
       f <- files
       (line, i) <- Files.readAllLines(f).toArray.toSeq.map(_.toString).zipWithIndex
-      word <- Seq("java.io.tmpdir", "getLastModifiedTime") if line.contains(word)
+      word <- Seq("java.io.tmpdir", "getLastModifiedTime", "createTempDirectory")
+      if line.contains(word)
     } yield s"$f:${i + 1}: $word"
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the block-size column __bsz appears under src/main only in graft.ops.Blocking") {
+    val files = scalaFiles(Paths.get("src/main"))
+    val home = Paths.get("src/main/scala/graft/ops/Blocking.scala")
+    assert(files.contains(home), s"$home is missing")
+    val bad = for {
+      f <- files if f != home
+      (line, i) <- Files.readAllLines(f).toArray.toSeq.map(_.toString).zipWithIndex
+      if line.contains("__bsz")
+    } yield s"$f:${i + 1}"
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }
